@@ -2,10 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** THE local SparkSession builder for every runnable main (Bench, Verify,
-  * Smoke, Scratch, Explain). One definition so a session-level config (a
-  * new legacy flag, a timezone) can never silently diverge between the
-  * tools — before this, the same five-line block lived in five mains.
+/** THE SparkSession builder for every runnable main, the `graft` CLI
+  * included. One definition so a session-level config (a new legacy flag,
+  * a timezone) can never silently diverge between the tools.
   */
 object LocalSession {
   /** AQE advisory post-shuffle partition size, keyed off the deployment
@@ -15,19 +14,21 @@ object LocalSession {
     * KB-to-MB volumes, where the Spark default 64m would collapse every
     * reduce stage to ONE task and serialize compute-dense operators; 4m
     * keeps tiny shuffles at 1-2 tasks while pair stages still fan out.
-    * Any non-local master gets the Spark default 64m — the scale-safe
-    * value — so a deployment that reuses this builder's conf block can
-    * never inherit the toy size silently. SPARK_GRAFT_ADVISORY_SIZE
+    * Any other master — `local-cluster[...]`, which simulates a cluster,
+    * included — gets the Spark default 64m, the scale-safe value, so a
+    * deployment that reuses this builder's conf block can never inherit
+    * the toy size silently. SPARK_GRAFT_ADVISORY_SIZE
     * overrides either branch for A/B runs. */
   def advisorySizeFor(master: String): String =
     sys.env.getOrElse("SPARK_GRAFT_ADVISORY_SIZE",
-      if (master.startsWith("local")) "4m" else "64m")
+      if (master.startsWith("local[")) "4m" else "64m")
 
   /** Cores default honors SPARK_GRAFT_CPUS; shuffle partitions track cores
-    * (never the 200 default — pointless tiny tasks on local data). */
+    * (never the 200 default — pointless tiny tasks on local data).
+    * GRAFT_MASTER, when set, is the deployment's master URL. */
   def build(defaultCpus: String = "4", logLevel: String = "WARN"): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", defaultCpus)
-    val master = s"local[$cpus]"
+    val master = sys.env.getOrElse("GRAFT_MASTER", s"local[$cpus]")
     val spark = SparkSession.builder()
       .master(master)
       .withExtensions(new graft.plans.GraftExtensions)

@@ -90,7 +90,13 @@ object ReloadSpec {
 case class TableOpts(primaryKey: Option[String] = None,
                      lastModified: Option[String] = None,
                      reload: ReloadSpec = ReloadSpec.Never,
-                     skip: Boolean = false)
+                     skip: Boolean = false) {
+  /** The key columns: "a,b" in `primary_key` is a composite key (an
+    * upgrade over the reference, which is single-key-only for incremental
+    * strategies). */
+  def pks: Seq[String] =
+    primaryKey.toSeq.flatMap(_.split(",").map(_.trim).filter(_.nonEmpty))
+}
 
 case class GraftConfig(sourceDir: String,
                        warehouseDir: String,

@@ -2,7 +2,7 @@ package graft.cli
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
+import graft.LocalSession
 
 /** CLI entry point — the reference's `__main__.py` argparse surface
   * (reference pgwarehouse/__main__.py:9-32):
@@ -29,19 +29,10 @@ object Main {
     Set("init", "list", "listwh", "extract", "load", "sync", "reload", "ddl",
       "profile", "compact", "card", "watch", "snapshot")
 
-  private def session(): SparkSession = {
-    val s = SparkSession.builder()
-      .master(sys.env.getOrElse("GRAFT_MASTER", "local[*]"))
-      .appName("graft")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  /** Sessions come from [[graft.LocalSession.build]], the profile the
+    * tests and the benchmark use, on every core unless SPARK_GRAFT_CPUS
+    * or GRAFT_MASTER says otherwise. */
+  private val allCores = Runtime.getRuntime.availableProcessors.toString
 
   def main(args: Array[String]): Unit = {
     val (flags, positional) = parseArgs(args)
@@ -75,7 +66,7 @@ object Main {
         System.err.println("usage: graft card <corpus-dir>")
         sys.exit(2); ""
       }
-      val spark = session()
+      val spark = LocalSession.build(allCores)
       try graft.SparkEntry.queries("x_dataset_card")(spark, dir)
         .show(200, truncate = false)
       finally spark.stop()
@@ -84,7 +75,7 @@ object Main {
 
     val cfg = GraftConfig.fromYaml(
       Files.readString(Paths.get(configPath)))
-    val spark = session()
+    val spark = LocalSession.build(allCores)
     // run() RETURNS the exit code rather than calling sys.exit inline —
     // an inline exit would bypass this finally and skip spark.stop()'s
     // graceful shutdown on a real cluster

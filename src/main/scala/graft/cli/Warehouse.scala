@@ -4,7 +4,8 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.catalog.Catalog
 import graft.io.Tables
-import graft.sync.{SyncEngine, SyncStrategy}
+import graft.sync.{Merge, Sink, SyncEngine, SyncStep, SyncStrategy}
+import graft.warehouse.DuckDbBackend
 
 /** The command controller: the Spark-native equivalent of the reference's
   * `PGWarehouse` class (reference pgwarehouse.py:40-124) — one method per
@@ -42,46 +43,44 @@ class Warehouse(spark: SparkSession, cfg: GraftConfig,
     * local_parks degraded path, tests/pg_setup.sql:22-29).
     */
   def strategyFor(name: String): SyncStrategy = {
-    val opts = cfg.tables.getOrElse(name, TableOpts())
-    // "a,b" in the config's primary_key is a composite key (an upgrade over
-    // the reference, which is single-key-only for incremental strategies)
-    def pks(pk: String): Seq[String] =
-      pk.split(",").map(_.trim).filter(_.nonEmpty).toSeq
-    if (opts.skip) SyncStrategy.Skip
-    else if (opts.reload.applies(today())) SyncStrategy.Reload
-    else (opts.primaryKey, opts.lastModified) match {
-      case (Some(pk), Some(lm)) => SyncStrategy.Upsert(pks(pk), lm)
-      case (Some(pk), None)     => SyncStrategy.AppendOnly(pks(pk))
-      case _                    => SyncStrategy.Reload
+    val o = opts(name)
+    if (o.skip) SyncStrategy.Skip
+    else if (o.reload.applies(today())) SyncStrategy.Reload
+    else (o.primaryKey, o.lastModified) match {
+      case (Some(_), Some(lm)) => SyncStrategy.Upsert(o.pks, lm)
+      case (Some(_), None)     => SyncStrategy.AppendOnly(o.pks)
+      case _                   => SyncStrategy.Reload
     }
   }
+
+  private def opts(name: String): TableOpts =
+    cfg.tables.getOrElse(name, TableOpts())
 
   /** `extract`: source table → chunked gzip CSV under the data dir
     * (pgwarehouse.py:254-303). Returns (chunk files, records extracted).
     */
-  def extract(name: String): (Long, Long) = extractFiltered(name, None)
+  def extract(name: String): (Long, Long) = {
+    val records = extractRows(name, sourceTable(name))
+    (pendingChunks(name).size.toLong, records)
+  }
 
-  /** Filtered extract — the incremental-delta path: the predicate lands
-    * in the source scan exactly like the reference injects its watermark
-    * into `\copy (select * from t where ...)` (duckdb_backend.py:157,167;
-    * pgwarehouse.py:275), so only the delta crosses the wire.
+  /** Write `rows` of table `name` as its pending chunks. A sync delta's
+    * watermark predicate lands in the source scan exactly like the
+    * reference injects it into `\copy (select * from t where ...)`
+    * (duckdb_backend.py:157,167; pgwarehouse.py:275), so only the delta
+    * crosses the wire. Returns the records written.
     */
-  def extractFiltered(name: String,
-                      filter: Option[org.apache.spark.sql.Column]): (Long, Long) = {
-    val src = filter.foldLeft(sourceTable(name))(_ where _)
+  private def extractRows(name: String, rows: DataFrame): Long = {
     // records written comes from an observed metric inside the write job
     // (Tables.writeCsvChunks) — ONE source scan per extract; a separate
     // count() would be a second full read on a JDBC source
-    val records = Tables.writeCsvChunks(src, chunkDir(name),
+    val records = Tables.writeCsvChunks(rows, chunkDir(name),
       maxRecords = cfg.maxRecords)
     // persist the captured schema next to the chunks (the reference's
     // {table}.schema dump, pgwarehouse.py:248-252) so `load` can run
     // without source access — true two-phase extract/load
-    writeSchemaFile(name, src.schema)
-    val p = new Path(chunkDir(name))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val files = fs.listStatus(p).count(_.getPath.getName.endsWith(".csv.gz"))
-    (files.toLong, records)
+    writeSchemaFile(name, rows.schema)
+    records
   }
 
   /** `load`: replay the CSV chunks into the warehouse table, schema pinned
@@ -97,11 +96,7 @@ class Warehouse(spark: SparkSession, cfg: GraftConfig,
     if (pendingChunks(name).isEmpty)
       return warehouseTable(name).map(_.count()).getOrElse(0L)
     if (dropTable) Catalog.dropPath(spark, warehousePath(name))
-    // schema comes from the capture file written at extract time (source
-    // access is NOT required to load, matching the reference's two-phase
-    // contract); fall back to the live source only if the file is missing
-    val schema = readSchemaFile(name).getOrElse(sourceTable(name).schema)
-    val df = Tables.readCsvChunks(spark, chunkDir(name), schema)
+    val df = Tables.readCsvChunks(spark, chunkDir(name), capturedSchema(name))
     writeAtomic(df, warehousePath(name))
     archiveChunks(name)
     spark.read.parquet(warehousePath(name)).count()
@@ -117,17 +112,21 @@ class Warehouse(spark: SparkSession, cfg: GraftConfig,
     try out.write(schema.json.getBytes("UTF-8")) finally out.close()
   }
 
-  private def readSchemaFile(name: String): Option[org.apache.spark.sql.types.StructType] = {
+  /** The schema captured at extract time: source access is NOT required
+    * to load, matching the reference's two-phase contract. Falls back to
+    * the live source only if the capture file is missing.
+    */
+  private def capturedSchema(name: String): org.apache.spark.sql.types.StructType = {
     val p = new Path(schemaFile(name))
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
+    if (!fs.exists(p)) sourceTable(name).schema
     else {
       val in = fs.open(p)
       try {
         val text = new String(
           org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8")
-        Some(org.apache.spark.sql.types.DataType.fromJson(text)
-          .asInstanceOf[org.apache.spark.sql.types.StructType])
+        org.apache.spark.sql.types.DataType.fromJson(text)
+          .asInstanceOf[org.apache.spark.sql.types.StructType]
       } finally in.close()
     }
   }
@@ -155,7 +154,8 @@ class Warehouse(spark: SparkSession, cfg: GraftConfig,
 
   /** `sync`: one incremental step per the table's strategy — bootstrap on
     * missing, watermark delta, merge-or-append (the reference's
-    * `update_table` control flow, clickhouse_backend.py:189-243).
+    * `update_table` control flow, clickhouse_backend.py:189-243), decided
+    * by [[SyncEngine.plan]] and landed through [[writeAtomic]].
     * Returns the action taken.
     */
   def sync(name: String): String = {
@@ -182,12 +182,8 @@ class Warehouse(spark: SparkSession, cfg: GraftConfig,
       throw new IllegalArgumentException(
         s"unknown dialect '$dialect' (expected one of " +
           s"${graft.schema.WarehouseDdl.dialects.keys.mkString(", ")})"))
-    val pk = cfg.tables.get(name).flatMap(_.primaryKey).toSeq
-      .flatMap(_.split(",").map(_.trim).filter(_.nonEmpty))
-    // captured schema first (two-phase contract: works with the source
-    // detached, same as load); live source only as fallback
-    val schema = readSchemaFile(name).getOrElse(sourceTable(name).schema)
-    d.createTable(name, schema, pk)
+    // captured schema, so it works with the source detached, same as load
+    d.createTable(name, capturedSchema(name), opts(name).pks)
   }
 
   /** `profile`: per-column null/distinct/min/max report for a source
@@ -224,10 +220,6 @@ class Warehouse(spark: SparkSession, cfg: GraftConfig,
       })
     }
 
-  /** Overwrite a parquet table that may also be an input of `df`: stage to
-    * a sibling tmp path, then swap — Spark cannot overwrite a path it is
-    * reading from, and a mid-job crash must not destroy the old table.
-    */
   /** `compact`: bin-pack a warehouse table's small files to ~`targetBytes`
     * parquet files (the maintenance op every incremental-append table
     * eventually needs — each sync appends its own files until scans pay a
@@ -335,8 +327,8 @@ class Warehouse(spark: SparkSession, cfg: GraftConfig,
     strategyFor(name) match {
       case SyncStrategy.Upsert(pks, lm) => landVia { batch =>
         warehouseTable(name) match {
-          case Some(tgt) => graft.sync.Merge.merge(tgt, batch, pks, lm)
-          case None => graft.sync.Merge.merge(
+          case Some(tgt) => Merge.merge(tgt, batch, pks, lm)
+          case None => Merge.merge(
             batch.limit(0), batch, pks, lm) // bootstrap: in-batch dedup only
         }
       }
@@ -363,10 +355,6 @@ class Warehouse(spark: SparkSession, cfg: GraftConfig,
   // with the warehouse side executed by a real engine. Enabled via
   // `--backend duckdb` (or `warehouse.duckdb_path` in the config).
 
-  private def pksFor(name: String): Seq[String] =
-    cfg.tables.get(name).flatMap(_.primaryKey).toSeq
-      .flatMap(_.split(",").map(_.trim).filter(_.nonEmpty))
-
   /** `load --backend duckdb`: replay pending chunks into the DuckDB
     * table (create-if-missing from the captured schema), archive them,
     * return the table's row count (duckdb_backend.py:78-110).
@@ -384,17 +372,15 @@ class Warehouse(spark: SparkSession, cfg: GraftConfig,
     * a keyed table raises the engine's duplicate-key error exactly as
     * the reference would.
     */
-  def loadDuck(name: String, duck: graft.warehouse.DuckDbBackend,
+  def loadDuck(name: String, duck: DuckDbBackend,
                append: Boolean = false): Long = {
     if (pendingChunks(name).isEmpty)
       return if (duck.tableExists(name)) duck.count(name) else 0L
     // The empty-chunks guard above protects existing data when an
     // extract produced nothing.
     if (!append) duck.dropTable(name)
-    if (!append || !duck.tableExists(name)) {
-      val schema = readSchemaFile(name).getOrElse(sourceTable(name).schema)
-      duck.createTable(name, schema, pksFor(name))
-    }
+    if (!append || !duck.tableExists(name))
+      duck.createTable(name, capturedSchema(name), opts(name).pks)
     duck.loadChunks(name, chunkDir(name))
     archiveChunks(name)
     duck.count(name)
@@ -409,29 +395,33 @@ class Warehouse(spark: SparkSession, cfg: GraftConfig,
     * once (the reference's cron-poll `sync` loop, README.md:217-225,
     * pointed at a real warehouse engine).
     */
-  def watchDuck(name: String, duck: graft.warehouse.DuckDbBackend): Long = {
+  def watchDuck(name: String, duck: DuckDbBackend): Long = {
+    val strategy = strategyFor(name)
     // same do-not-touch contract as watch(): a skipped table must not
     // even be created in the warehouse engine
-    if (strategyFor(name) == SyncStrategy.Skip) return 0L
+    if (strategy == SyncStrategy.Skip) return 0L
     val src = s"${cfg.sourceDir}/$name.parquet"
     val p = new Path(src)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     require(fs.exists(p) && fs.getFileStatus(p).isDirectory,
       s"watch needs a directory source (a landing zone): $src")
-    val schema = readSchemaFile(name).getOrElse(sourceTable(name).schema)
-    duck.createTable(name, schema, pksFor(name))
+    val schema = capturedSchema(name)
+    duck.createTable(name, schema, opts(name).pks)
     // keyed tables land via `INSERT OR REPLACE` (the engine resolves on
     // the table's PRIMARY KEY), mirroring the parquet watch's strategy
-    // routing; unkeyed tables COPY-append
-    val keyed = strategyFor(name) match {
-      case SyncStrategy.Upsert(_, _) | SyncStrategy.AppendOnly(_) =>
-        Some(schema)
-      case _ => None
+    // routing; unkeyed tables COPY-append. An upsert batch first reduces
+    // to the last writer per key, the rule every sync path shares (one
+    // statement may not replace a key twice)
+    val (keyed, lastWriters) = strategy match {
+      case SyncStrategy.Upsert(pks, lm) =>
+        (Some(schema), (b: DataFrame) => Merge.dedupChanges(b, pks, Seq(b(lm))))
+      case SyncStrategy.AppendOnly(_) => (Some(schema), identity[DataFrame] _)
+      case _ => (None, identity[DataFrame] _)
     }
     graft.streaming.StreamingSync.incrementalFileSyncVia(spark, src,
       s"${cfg.dataDir}/${name}_watch_duck_ckpt") { (batch, batchId) =>
       val chunks = s"${cfg.dataDir}/${name}_watch_duck_b$batchId"
-      Tables.writeCsvChunks(batch, chunks)
+      Tables.writeCsvChunks(lastWriters(batch), chunks)
       duck.appendBatchIdempotent(name, batchId, chunks, keyed)
       val cp = new Path(chunks)
       cp.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(cp, true)
@@ -439,58 +429,42 @@ class Warehouse(spark: SparkSession, cfg: GraftConfig,
   }
 
   /** `reload --backend duckdb`: drop + full extract/load. */
-  def reloadDuck(name: String, duck: graft.warehouse.DuckDbBackend): Long = {
+  def reloadDuck(name: String, duck: DuckDbBackend): Long = {
     extract(name)
     loadDuck(name, duck)
   }
 
-  /** `sync --backend duckdb`: the reference's `update_table` control flow
-    * (duckdb_backend.py:129-197) — bootstrap-on-missing, watermark read
-    * from the WAREHOUSE side, delta-only extract, then COPY-append or
-    * `INSERT OR REPLACE` merge. Returns the action taken.
+  /** `sync --backend duckdb`: the step [[SyncEngine.plan]] decides, with
+    * the watermark read from the WAREHOUSE side (duckdb_backend.py:129-197)
+    * and the step's rows extracted once: a reload or bootstrap lands
+    * through [[loadDuck]], an append COPYs the delta, a merge
+    * `INSERT OR REPLACE`s it. A zero-row delta is a `noop`. Returns the
+    * action taken.
     */
-  def syncDuck(name: String, duck: graft.warehouse.DuckDbBackend): String = {
-    import org.apache.spark.sql.functions.{col, lit}
-    val schema = readSchemaFile(name).getOrElse(sourceTable(name).schema)
-    def fullLoad(drop: Boolean): Unit = {
-      extract(name)
-      if (drop) duck.dropTable(name)
-      duck.createTable(name, schema, pksFor(name))
-      duck.loadChunks(name, chunkDir(name))
-      archiveChunks(name)
-    }
-    strategyFor(name) match {
-      case SyncStrategy.Skip => "skip"
-      case SyncStrategy.Reload => fullLoad(drop = true); "reload"
-      case _ if !duck.tableExists(name) => fullLoad(drop = false); "bootstrap"
-      case SyncStrategy.AppendOnly(pks) =>
-        // watermark needs ONE monotone key, like the reference
-        // (duckdb_backend.py:143-144); the parquet engine's composite
-        // anti-join delta has no warehouse-side analog without reading
-        // the whole duck table back out
-        require(pks.size == 1,
+  def syncDuck(name: String, duck: DuckDbBackend): String = {
+    val sink = if (!duck.tableExists(name)) None else Some(new Sink {
+      def max(col: String): Option[Any] = duck.maxScalar(name, col)
+      // watermark needs ONE monotone key, like the reference
+      // (duckdb_backend.py:143-144); the composite anti-join delta has no
+      // warehouse-side analog without reading the whole duck table back
+      def keys(pks: Seq[String]): DataFrame =
+        throw new IllegalArgumentException(
           s"duckdb append-only sync needs a single-column pk, got " +
             s"${pks.mkString(",")} (reference parity, duckdb_backend.py:143-144)")
-        val wm = duck.maxScalar(name, pks.head)
-        val (_, n) =
-          extractFiltered(name, wm.map(v => col(pks.head) > lit(v)))
-        if (n == 0) "noop"
-        else {
-          duck.loadChunks(name, chunkDir(name)); archiveChunks(name)
-          "append"
-        }
-      case SyncStrategy.Upsert(_, lm) =>
-        // `>=` watermark: boundary-instant rows re-extract and the keyed
-        // INSERT OR REPLACE dedups them — same idempotence argument as
-        // the parquet merge path (duckdb_backend.py:167,190-197)
-        val wm = duck.maxScalar(name, lm)
-        val (_, n) = extractFiltered(name, wm.map(v => col(lm) >= lit(v)))
-        if (n == 0) "noop"
-        else {
-          duck.mergeChunks(name, chunkDir(name), schema)
-          archiveChunks(name)
-          "merge"
-        }
+    })
+    def landDelta(step: SyncStep, rows: DataFrame)(land: => Long): String =
+      if (extractRows(name, rows) == 0) "noop"
+      else { land; archiveChunks(name); step.action }
+    engine.plan(sourceTable(name), strategyFor(name), sink) match {
+      case SyncStep.Skip => "skip"
+      case SyncStep.Replace(action, rows) =>
+        extractRows(name, rows)
+        loadDuck(name, duck)
+        action
+      case step @ SyncStep.Append(rows) =>
+        landDelta(step, rows)(duck.loadChunks(name, chunkDir(name)))
+      case step @ SyncStep.Upsert(rows, _) =>
+        landDelta(step, rows)(duck.mergeChunks(name, chunkDir(name), rows.schema))
     }
   }
 

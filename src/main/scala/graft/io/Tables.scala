@@ -386,10 +386,6 @@ object Tables {
     df.write.format("jdbc").option("url", url).option("dbtable", dbtable)
       .mode("append").save()
 
-  /** S7-ish: create-or-replace a parquet-backed table directory. */
-  def overwriteParquet(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite").parquet(path)
-
   // ── Versioned snapshots: poor-man's time travel without a lakehouse
   //    format. Every publish stages a new immutable `v=N` directory and
   //    RENAMES it into place — rename is the atomic primitive, so readers

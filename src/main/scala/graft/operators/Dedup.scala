@@ -572,15 +572,6 @@ object Dedup {
       when(keptQuery =!= "", concat(lit("?"), keptQuery)).otherwise(lit("")))
   }
 
-  /** The canonical HOST of a URL (lowercased, `www.`-stripped authority of
-    * [[canonicalUrl]]) — the grouping key for per-domain policies (C4-style
-    * page caps, domain blocklists, crawl budgets). ONE definition shared by
-    * the batch cap and its streaming twin so the two can never disagree on
-    * what a "domain" is (lockstep rule).
-    */
-  def canonicalHost(url: Column): Column =
-    regexp_extract(canonicalUrl(url), "^[a-z0-9+.-]+://([^/?]*)", 1)
-
   /** C4-style per-domain page cap: rank each page within its canonical
     * host by ascending `idCol` and keep the first `cap` — the crawl-budget
     * stage that stops a single mega-site from dominating the corpus (C4

@@ -85,7 +85,8 @@ object Merge {
   }
 
   /** J2 shape (ClickHouse delete+insert): no conflict resolution inside the
-    * change set — caller guarantees unique pks (e.g. one batch per key).
+    * change set — caller guarantees unique pks (e.g. a delta already
+    * reduced by [[dedupChanges]], as a planned merge step is).
     */
   def deleteInsert(target: DataFrame, changes: DataFrame, pkCols: Seq[String]): DataFrame =
     target.join(changes, pkCols, "left_anti").unionByName(changes)
@@ -114,57 +115,101 @@ object SyncStrategy {
   case object Skip extends SyncStrategy
 }
 
+/** What [[SyncEngine.plan]] reads off an existing warehouse table. Each
+  * warehouse answers from its own side, so neither reads the other back.
+  */
+trait Sink {
+  /** `max(col)` over the table; None when it holds no rows. */
+  def max(col: String): Option[Any]
+  /** The table's distinct key tuples, for a composite-key append delta. */
+  def keys(pks: Seq[String]): DataFrame
+}
+
+object Sink {
+  /** A warehouse table Spark can read. */
+  def of(table: DataFrame): Sink = new Sink {
+    def max(col: String): Option[Any] = Watermark.maxOf(table, col)
+    def keys(pks: Seq[String]): DataFrame =
+      table.select(pks.map(table(_)): _*).distinct()
+  }
+}
+
+/** One decided sync step: the action and the source rows it lands. Every
+  * warehouse lands the same step; only the landing differs.
+  */
+sealed abstract class SyncStep(val action: String)
+object SyncStep {
+  /** Land nothing. */
+  case object Skip extends SyncStep("skip")
+  /** The rows become the table: a `reload`, or the `bootstrap` of a
+    * missing one. */
+  final case class Replace(override val action: String, rows: DataFrame)
+    extends SyncStep(action)
+  /** Append the rows: the delta past the key watermark. */
+  final case class Append(rows: DataFrame) extends SyncStep("append")
+  /** Replace-or-insert the rows on `pks`: the `>=` delta, already reduced
+    * to the last writer per key. */
+  final case class Upsert(rows: DataFrame, pks: Seq[String])
+    extends SyncStep("merge")
+}
+
 /** Strategy interpreter mirroring `ClickHouseBackend.update_table` control flow
   * (clickhouse_backend.py:189-243): bootstrap-on-missing, watermark read from
-  * the sink, zero-delta short-circuit, merge-or-append, composite-PK rejection.
+  * the sink, delta extract, merge-or-append, composite-PK rejection.
   *
-  * Source/sink are abstract DataFrame providers so the same engine drives the
-  * parquet test corpus and a real JDBC pair.
+  * [[plan]] is the one place a sync step is decided, for every warehouse;
+  * [[sync]] lands it as the new sink DataFrame (the parquet warehouse).
   */
 class SyncEngine(spark: SparkSession) {
   import SyncStrategy._
 
-  /** Result of one sync step: the new sink contents + rows moved. */
-  case class SyncResult(table: DataFrame, recordsMoved: Long, action: String)
+  /** Result of one sync step: the new sink contents and the action. */
+  case class SyncResult(table: DataFrame, action: String)
 
-  /** One sync step. `sink=None` models a not-yet-created warehouse table
-    * (bootstrap path, clickhouse_backend.py:190-195).
+  /** Decide one sync step. `sink=None` models a not-yet-created warehouse
+    * table (bootstrap path, clickhouse_backend.py:190-195).
     */
-  def sync(source: DataFrame, sink: Option[DataFrame], strategy: SyncStrategy): SyncResult =
+  def plan(source: DataFrame, strategy: SyncStrategy, sink: Option[Sink]): SyncStep =
     strategy match {
-      case Skip =>
-        SyncResult(sink.getOrElse(source.limit(0)), 0L, "skip")
-      case Reload =>
-        SyncResult(source, -1L, "reload")
+      case Skip => SyncStep.Skip
+      case Reload => SyncStep.Replace("reload", source)
       case s: AppendOnly =>
         checkPks(s.pks)
-        sink match {
-          case None => SyncResult(source, -1L, "bootstrap")
-          case Some(tgt) =>
-            // single monotone key → watermark predicate (pushed into the
-            // scan, the cheap path); composite key → anti join on the full
-            // key (no lexicographic watermark exists in general). The anti
-            // join shuffles only the key columns of the target and
-            // AQE-broadcasts when the sink key set is small.
-            val delta = s.pks match {
-              case Seq(pk) =>
-                Watermark.newerThan(source, pk, Watermark.maxOf(tgt, pk))
-              case pks =>
-                source.join(tgt.select(pks.map(tgt(_)): _*).distinct(),
-                  pks, "left_anti")
-            }
-            SyncResult(tgt.unionByName(delta), -1L, "append")
+        sink.fold[SyncStep](SyncStep.Replace("bootstrap", source)) { tgt =>
+          // single monotone key → watermark predicate (pushed into the
+          // scan, the cheap path); composite key → anti join on the full
+          // key (no lexicographic watermark exists in general). The anti
+          // join shuffles only the key columns of the target and
+          // AQE-broadcasts when the sink key set is small.
+          SyncStep.Append(s.pks match {
+            case Seq(pk) => Watermark.newerThan(source, pk, tgt.max(pk))
+            case pks => source.join(tgt.keys(pks), pks, "left_anti")
+          })
         }
       case s: Upsert =>
         checkPks(s.pks)
-        sink match {
-          case None => SyncResult(source, -1L, "bootstrap")
-          case Some(tgt) =>
-            val delta =
-              Watermark.modifiedSince(source, s.lastModified, Watermark.maxOf(tgt, s.lastModified))
-            SyncResult(Merge.merge(tgt, delta, s.pks, s.lastModified), -1L, "merge")
+        sink.fold[SyncStep](SyncStep.Replace("bootstrap", source)) { tgt =>
+          val delta = Watermark.modifiedSince(source, s.lastModified,
+            tgt.max(s.lastModified))
+          SyncStep.Upsert(
+            Merge.dedupChanges(delta, s.pks, Seq(delta(s.lastModified))), s.pks)
         }
     }
+
+  /** One sync step, landed as the new sink contents: append is target ∪
+    * delta, merge is the [[Merge]] identity over the deduped delta.
+    */
+  def sync(source: DataFrame, sink: Option[DataFrame], strategy: SyncStrategy): SyncResult = {
+    val step = plan(source, strategy, sink.map(Sink.of))
+    // plan only appends or merges into a sink that exists
+    val table = step match {
+      case SyncStep.Skip => sink.getOrElse(source.limit(0))
+      case SyncStep.Replace(_, rows) => rows
+      case SyncStep.Append(rows) => sink.get.unionByName(rows)
+      case SyncStep.Upsert(rows, pks) => Merge.deleteInsert(sink.get, rows, pks)
+    }
+    SyncResult(table, step.action)
+  }
 
   /** Composite keys are natively supported (the merge identity and the
     * anti-join delta are key-arity-agnostic) — an upgrade over the

@@ -107,16 +107,6 @@ class DuckDbBackend(val dbPath: String) {
       }
     }
 
-  /** The schema-pinned `columns={...}` spec for read_csv — ONE builder
-    * for both upsert paths, so a quoting/type-mapping fix can't diverge
-    * between them.
-    */
-  private def colSpec(schema: StructType): String =
-    schema.fields.map(f =>
-      s"'${WarehouseDdl.DuckDb.quoteName(f.name)}': " +
-        s"'${WarehouseDdl.DuckDb.colType(WarehouseDdl.pgName(f.dataType))}'")
-      .mkString("{", ", ", "}")
-
   private def chunkFiles(chunkDir: String): Seq[java.io.File] = {
     val dir = new java.io.File(chunkDir)
     Option(dir.listFiles()).getOrElse(Array.empty)
@@ -124,58 +114,69 @@ class DuckDbBackend(val dbPath: String) {
       .sortBy(_.getName).toSeq
   }
 
-  /** Bulk-load every pending gzip CSV chunk: `COPY t FROM 'chunk'
-    * (HEADER)` per file (duckdb_backend.py:105-110; DuckDB decompresses
-    * by extension). Chunk column order is the table's column order — both
-    * derive from the same captured schema. Returns chunks loaded.
+  /** `COPY t FROM 'chunk' (HEADER)` (duckdb_backend.py:105-110; DuckDB
+    * decompresses by extension). Chunk column order is the table's column
+    * order — both derive from the same captured schema.
     */
-  def loadChunks(table: String, chunkDir: String): Long = {
+  private def copySql(table: String)(chunk: java.io.File): String =
+    s"COPY ${ident(table)} FROM '${chunk.getAbsolutePath}' (HEADER)"
+
+  /** `INSERT OR REPLACE INTO t SELECT * FROM read_csv(...)`
+    * (duckdb_backend.py:190-197) — DuckDB resolves conflicts on the
+    * table's PRIMARY KEY. Unlike the reference's `read_csv_auto`, the read
+    * is schema-PINNED via a `columns={...}` spec built from the captured
+    * schema (the engine-wide rule: interchange reads never re-infer).
+    */
+  private def upsertSql(table: String, schema: StructType): java.io.File => String = {
+    val spec = schema.fields.map(f =>
+      s"'${WarehouseDdl.DuckDb.quoteName(f.name)}': " +
+        s"'${WarehouseDdl.DuckDb.colType(WarehouseDdl.pgName(f.dataType))}'")
+      .mkString("{", ", ", "}")
+    chunk => s"INSERT OR REPLACE INTO ${ident(table)} SELECT * FROM " +
+      s"read_csv('${chunk.getAbsolutePath}', header=true, columns=$spec)"
+  }
+
+  /** Run one landing statement per chunk in `chunkDir`, in name order.
+    * Returns chunks landed.
+    */
+  private def landChunks(s: Statement, chunkDir: String)
+                        (sql: java.io.File => String): Long = {
     val files = chunkFiles(chunkDir)
-    withStmt { s =>
-      files.foreach { f =>
-        s.execute(s"COPY ${ident(table)} FROM '${f.getAbsolutePath}' (HEADER)")
-      }
-    }
+    files.foreach(f => s.execute(sql(f)))
     files.size.toLong
   }
 
-  /** Keyed upsert of every pending chunk: `INSERT OR REPLACE INTO t
-    * SELECT * FROM read_csv(...)` (duckdb_backend.py:190-197) — DuckDB
-    * resolves conflicts on the table's PRIMARY KEY. Unlike the
-    * reference's `read_csv_auto`, the read is schema-PINNED via a
-    * `columns={...}` spec built from the captured schema (the engine-wide
-    * rule: interchange reads never re-infer).
+  /** Bulk-load every pending gzip CSV chunk with [[copySql]]. Returns
+    * chunks loaded.
+    */
+  def loadChunks(table: String, chunkDir: String): Long =
+    withStmt(landChunks(_, chunkDir)(copySql(table)))
+
+  /** Keyed upsert of every pending chunk with [[upsertSql]]. One
+    * statement may not replace a key twice, so callers land at most one
+    * row per key: the last writer (graft.sync.Merge.dedupChanges).
     */
   def mergeChunks(table: String, chunkDir: String,
-                  schema: StructType): Long = {
-    val spec = colSpec(schema)
-    val files = chunkFiles(chunkDir)
-    withStmt { s =>
-      files.foreach { f =>
-        s.execute(s"INSERT OR REPLACE INTO ${ident(table)} SELECT * FROM " +
-          s"read_csv('${f.getAbsolutePath}', header=true, columns=$spec)")
-      }
-    }
-    files.size.toLong
-  }
+                  schema: StructType): Long =
+    withStmt(landChunks(_, chunkDir)(upsertSql(table, schema)))
 
-  /** Exactly-once append of one `watch` micro-batch: COPY every chunk in
+  /** Exactly-once append of one `watch` micro-batch: land every chunk in
     * `chunkDir` into `table` inside ONE transaction that also claims
     * (table, batchId) in a batch-log table. foreachBatch is at-least-once
     * on crash replay; a replayed batch finds its id already claimed and
-    * is skipped whole, so rows land exactly once. The claim and the COPYs
-    * commit together — a crash mid-batch rolls both back, and the replay
-    * then re-lands cleanly. Returns true if the batch was applied, false
-    * if it was a replay of an already-committed batch.
+    * is skipped whole, so rows land exactly once. The claim and the
+    * statements commit together — a crash mid-batch rolls both back, and
+    * the replay then re-lands cleanly. Returns true if the batch was
+    * applied, false if it was a replay of an already-committed batch.
     *
     * (Single-writer is a DuckDB file-level guarantee, so check-then-insert
     * needs no cross-process race handling.)
     */
   def appendBatchIdempotent(table: String, batchId: Long,
                             chunkDir: String,
-                            /** Some(schema) → keyed landing: `INSERT OR
-                              * REPLACE` from schema-pinned read_csv (the
-                              * watch-merge mode); None → plain COPY append. */
+                            /** Some(schema) → keyed landing with
+                              * [[upsertSql]] (the watch-merge mode); None →
+                              * plain [[copySql]] append. */
                             mergeSchema: Option[StructType] = None): Boolean =
     withConn { c =>
       c.setAutoCommit(false)
@@ -191,21 +192,8 @@ class DuckDbBackend(val dbPath: String) {
         else {
           s.execute("INSERT INTO _graft_watch_log VALUES " +
             s"('${ident(table)}', $batchId)")
-          mergeSchema match {
-            case None =>
-              chunkFiles(chunkDir).foreach { f =>
-                s.execute(
-                  s"COPY ${ident(table)} FROM '${f.getAbsolutePath}' (HEADER)")
-              }
-            case Some(schema) =>
-              val spec = colSpec(schema)
-              chunkFiles(chunkDir).foreach { f =>
-                s.execute(
-                  s"INSERT OR REPLACE INTO ${ident(table)} SELECT * FROM " +
-                    s"read_csv('${f.getAbsolutePath}', header=true, " +
-                    s"columns=$spec)")
-              }
-          }
+          landChunks(s, chunkDir)(
+            mergeSchema.fold(copySql(table) _)(upsertSql(table, _)))
           c.commit(); true
         }
       } catch { case e: Throwable => c.rollback(); throw e }

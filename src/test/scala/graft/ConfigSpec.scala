@@ -34,6 +34,7 @@ class ConfigSpec extends AnyFunSuite {
       "table order preserved")
     val ev = cfg.tables("events")
     assert(ev.primaryKey.contains("event_id") && ev.lastModified.contains("ts"))
+    assert(ev.pks == Seq("event_id") && cfg.tables("parks").pks.isEmpty)
     assert(cfg.tables("parks").reload == ReloadSpec.Always)
     assert(cfg.tables("ignored").skip)
   }
@@ -139,5 +140,14 @@ class ConfigSpec extends AnyFunSuite {
     // (pgwarehouse.py:181 tests `== True`); we fail loudly instead
     intercept[IllegalArgumentException] { reloadOf("sometimes") }
     intercept[IllegalArgumentException] { reloadOf("[sun,noday]") }
+  }
+
+  test("the toy 4m advisory size is for local[...] masters only: " +
+       "local-cluster[...] simulates a cluster and gets the scale-safe 64m") {
+    if (!sys.env.contains("SPARK_GRAFT_ADVISORY_SIZE")) {
+      assert(LocalSession.advisorySizeFor("local[4]") == "4m")
+      assert(LocalSession.advisorySizeFor("local[*]") == "4m")
+      assert(LocalSession.advisorySizeFor("local-cluster[2,1,1024]") == "64m")
+    }
   }
 }

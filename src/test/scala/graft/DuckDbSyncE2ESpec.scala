@@ -44,7 +44,12 @@ class DuckDbSyncE2ESpec extends AnyFunSuite {
       "dparks" -> TableOpts(reload = ReloadSpec.Always),
       "devents" -> TableOpts(primaryKey = Some("site,seq"),
         lastModified = Some("updated")),
-      "dkeys" -> TableOpts(primaryKey = Some("code"))),
+      "dkeys" -> TableOpts(primaryKey = Some("code")),
+      "dver" -> TableOpts(primaryKey = Some("id"),
+        lastModified = Some("updated")),
+      "dpair" -> TableOpts(primaryKey = Some("id"),
+        lastModified = Some("updated")),
+      "dcomp" -> TableOpts(primaryKey = Some("site,seq"))),
     duckdbPath = Some(dbPath))
 
   private def wh() = new Warehouse(spark, cfg())
@@ -294,5 +299,136 @@ class DuckDbSyncE2ESpec extends AnyFunSuite {
     assert(!d.appendBatchIdempotent("dfeed", claimed.max, chunks),
       "an already-claimed batch id is skipped whole")
     assert(d.count("dfeed") == 8L, "replay added no rows")
+  }
+
+  // ── one last-writer rule on both warehouses ───────────────────────────
+  // Source tables below are directories of single-file parquet parts, one
+  // part per landed transaction, with every version of a key kept — the
+  // shape a CDC feed (and the benchmark's generator) produces.
+
+  private def versions(rows: Seq[(Long, String, String)]): DataFrame =
+    rows.map { case (id, payload, u) => (id, payload, ts(u)) }
+      .toDF("id", "payload", "updated")
+
+  /** Land `df` as ONE parquet file named `part` in the table's source dir. */
+  private def landPart(table: String, part: String, df: DataFrame): Unit = {
+    val dir = new java.io.File(s"$sourceDir/$table.parquet")
+    assert(dir.mkdirs() || dir.isDirectory)
+    val stage = TestSpark.tmpDir(s"dpart_${table}_$part")
+    df.coalesce(1).write.mode(SaveMode.Overwrite).parquet(stage)
+    val file = new java.io.File(stage).listFiles()
+      .filter(_.getName.endsWith(".parquet")).head
+    java.nio.file.Files.copy(file.toPath,
+      new java.io.File(dir, s"$part.parquet").toPath)
+  }
+
+  /** A cell as both engines can agree on it: numbers by value, naive
+    * timestamps as UTC instants (the session time zone is UTC). */
+  private def cell(v: Any): Any = v match {
+    case n: java.lang.Number => BigDecimal(n.toString)
+    case t: java.sql.Timestamp => t.toInstant
+    case t: java.time.LocalDateTime => t.toInstant(java.time.ZoneOffset.UTC)
+    case other => other
+  }
+
+  /** The DuckDB table equals the parquet warehouse table, cell for cell. */
+  private def assertSameCells(table: String, d: DuckDbBackend): Unit = {
+    val parquet = spark.read.parquet(s"$warehouseDir/$table.parquet")
+      .orderBy("id").collect().map(_.toSeq.map(cell)).toSeq
+    // DuckDB hands naive TIMESTAMPs back as wall-clock Timestamps in the
+    // JVM zone; read them as UTC wall-clock like the parquet side
+    val duckRows = d.selectAll(table, "id").map(_.map {
+      case t: java.sql.Timestamp => cell(t.toLocalDateTime)
+      case other => cell(other)
+    })
+    assert(duckRows == parquet, s"duck $duckRows != parquet $parquet")
+  }
+
+  private def payloadOf(d: DuckDbBackend, table: String, id: Long): String =
+    d.selectAll(table, "id")
+      .find(_.head.asInstanceOf[java.lang.Number].longValue == id)
+      .map(_(1).toString).get
+
+  test("d10 a key that changes on two consecutive upsert ticks lands its " +
+       "newest version in DuckDB, cell for cell with the parquet warehouse") {
+    assume(driverPresent, "DuckDB JDBC driver not on test classpath")
+    val w = wh()
+    val d = duck()
+    def tick(expect: String): Unit = {
+      assert(w.syncDuck("dver", d) == expect)
+      w.sync("dver")
+      assertSameCells("dver", d)
+    }
+    landPart("dver", "base", versions((1L to 30L).map(i =>
+      (i, s"v0-$i", f"2024-01-01 00:00:$i%02d"))))
+    tick("bootstrap")
+    // tick 1: key 5 changes (a one-row transaction)
+    landPart("dver", "t1", versions(Seq((5L, "v1", "2024-01-02 00:00:00"))))
+    tick("merge")
+    // tick 2: key 5 changes again beside ten new keys. The `>=` watermark
+    // re-extracts tick 1's boundary row, so the delta holds both versions
+    // of key 5 in different source files
+    landPart("dver", "t2", versions((5L, "v2", "2024-01-03 00:00:00") +:
+      (31L to 40L).map(i => (i, s"v0-$i", "2024-01-03 00:00:00"))))
+    tick("merge")
+    assert(payloadOf(d, "dver", 5L) == "v2", "the newest version wins")
+    assert(d.count("dver") == 40L)
+  }
+
+  test("d11 one upsert delta holding two versions of each changed key " +
+       "lands the newer ones") {
+    assume(driverPresent, "DuckDB JDBC driver not on test classpath")
+    val w = wh()
+    val d = duck()
+    landPart("dpair", "base", versions((1L to 30L).map(i =>
+      (i, s"v0-$i", f"2024-01-01 00:00:$i%02d"))))
+    assert(w.syncDuck("dpair", d) == "bootstrap")
+    w.sync("dpair")
+    // one transaction file holds keys 1..10 twice each, plus new keys
+    landPart("dpair", "t1", versions(
+      (1L to 10L).map(i => (i, s"new-$i", "2024-01-03 00:00:00")) ++
+        (31L to 33L).map(i => (i, s"n$i", "2024-01-02 00:00:00")) ++
+        (1L to 10L).map(i => (i, s"old-$i", "2024-01-02 00:00:00"))))
+    assert(w.syncDuck("dpair", d) == "merge")
+    w.sync("dpair")
+    assertSameCells("dpair", d)
+    assert((1L to 10L).forall(i => payloadOf(d, "dpair", i) == s"new-$i"))
+    assert(d.count("dpair") == 33L)
+  }
+
+  test("d12 keyed watch --backend duckdb: two versions of a key landed " +
+       "before one drain resolve to the last writer") {
+    assume(driverPresent, "DuckDB JDBC driver not on test classpath")
+    val w = new Warehouse(spark, cfg().copy(tables =
+      scala.collection.immutable.ListMap(
+        "dkfeed2" -> TableOpts(primaryKey = Some("id"),
+          lastModified = Some("updated")))))
+    val d = duck()
+    landPart("dkfeed2", "b1", versions(Seq(
+      (1L, "v1", "2024-01-01 00:00:00"), (2L, "w1", "2024-01-01 00:00:00"))))
+    assert(w.watchDuck("dkfeed2", d) == 2L)
+    landPart("dkfeed2", "b2", versions(Seq(
+      (1L, "v3", "2024-01-03 00:00:00"),
+      (4L, "x4", "2024-01-02 00:00:00"),
+      (5L, "x5", "2024-01-02 00:00:00"),
+      (6L, "x6", "2024-01-02 00:00:00"),
+      (1L, "v2", "2024-01-02 00:00:00"))))
+    assert(w.watchDuck("dkfeed2", d) == 5L)
+    assert(d.count("dkfeed2") == 5L)
+    assert(payloadOf(d, "dkfeed2", 1L) == "v3", "last writer by `updated`")
+  }
+
+  test("d13 composite-key append-only sync is rejected on DuckDB before " +
+       "anything lands (its anti-join delta would read the table back)") {
+    assume(driverPresent, "DuckDB JDBC driver not on test classpath")
+    val w = wh()
+    val d = duck()
+    val rows = Seq(("a", 1L), ("a", 2L), ("b", 1L))
+    writeSource("dcomp", rows.toDF("site", "seq"))
+    assert(w.syncDuck("dcomp", d) == "bootstrap")
+    writeSource("dcomp", (rows :+ (("b", 2L))).toDF("site", "seq"))
+    val e = intercept[IllegalArgumentException](w.syncDuck("dcomp", d))
+    assert(e.getMessage.contains("single-column pk"), e.getMessage)
+    assert(d.count("dcomp") == 3L)
   }
 }
