@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.Functions
+import graft.io.Tables
 
 /** Catalog operations (reference S8-S13, SURVEY §2.1): table listing with
   * sizes, existence probes, row counts, drops — over `spark.catalog` plus
@@ -65,7 +66,7 @@ object Catalog {
     */
   def rowCounts(spark: SparkSession, sfDir: String): DataFrame =
     corpusTables.map { t =>
-      spark.read.parquet(s"$sfDir/$t.parquet")
+      Tables.parquet(spark, s"$sfDir/$t.parquet")
         .agg(count(lit(1)).as("n_rows"))
         .select(lit(t).as("table_name"), col("n_rows"),
           // the reference's to_char(reltuples,'FM999,999,999,999') column
@@ -82,10 +83,11 @@ object Catalog {
     fsFor(spark, p).exists(p)
   }
 
-  /** S13: schema introspection — on parquet, the footer schema (no scan). */
+  /** S13: schema introspection — on parquet, the footer schema, read on
+    * the driver (no scan, no job). */
   def describe(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     import spark.implicits._
-    spark.read.parquet(s"$sfDir/$name.parquet").schema.fields.toSeq
+    Tables.parquet(spark, s"$sfDir/$name.parquet").schema.fields.toSeq
       .map(f => (f.name, f.dataType.simpleString, f.nullable))
       .toDF("column_name", "data_type", "nullable")
   }

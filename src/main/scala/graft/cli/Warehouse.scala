@@ -1,5 +1,7 @@
 package graft.cli
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.catalog.Catalog
@@ -99,7 +101,7 @@ class Warehouse(spark: SparkSession, cfg: GraftConfig,
     val df = Tables.readCsvChunks(spark, chunkDir(name), capturedSchema(name))
     writeAtomic(df, warehousePath(name))
     archiveChunks(name)
-    spark.read.parquet(warehousePath(name)).count()
+    Tables.parquet(spark, warehousePath(name)).count()
   }
 
   private def schemaFile(name: String) = s"${cfg.dataDir}/$name.schema.json"
@@ -155,14 +157,22 @@ class Warehouse(spark: SparkSession, cfg: GraftConfig,
   /** `sync`: one incremental step per the table's strategy — bootstrap on
     * missing, watermark delta, merge-or-append (the reference's
     * `update_table` control flow, clickhouse_backend.py:189-243), decided
-    * by [[SyncEngine.plan]] and landed through [[writeAtomic]].
-    * Returns the action taken.
+    * by [[SyncEngine.plan]]. An append lands only the delta, through
+    * [[appendAtomic]]; a reload, bootstrap or merge rewrites the table
+    * through [[writeAtomic]]. Returns the action taken.
     */
   def sync(name: String): String = {
-    val res = engine.sync(sourceTable(name), warehouseTable(name),
-      strategyFor(name))
-    if (res.action != "skip") writeAtomic(res.table, warehousePath(name))
-    res.action
+    val path = warehousePath(name)
+    val target = warehouseTable(name)
+    val step = engine.plan(sourceTable(name), strategyFor(name), target.map(Sink.of))
+    step match {
+      case SyncStep.Skip => ()
+      case SyncStep.Replace(_, rows) => writeAtomic(rows, path)
+      case SyncStep.Append(rows) => appendAtomic(rows, path)
+      case SyncStep.Upsert(rows, pks) =>
+        writeAtomic(Merge.deleteInsert(target.get, rows, pks), path)
+    }
+    step.action
   }
 
   /** `reload`: full extract + load with drop (pgwarehouse.py:191-194). */
@@ -222,14 +232,16 @@ class Warehouse(spark: SparkSession, cfg: GraftConfig,
 
   /** `compact`: bin-pack a warehouse table's small files to ~`targetBytes`
     * parquet files (the maintenance op every incremental-append table
-    * eventually needs — each sync appends its own files until scans pay a
-    * per-file open cost). Rewrites through the same atomic staged swap as
-    * load, so readers never see a partial table. Returns (files before,
-    * files after, rows).
+    * eventually needs — each append sync adds the delta's own files until
+    * scans pay a per-file open cost). Rewrites through the same atomic
+    * staged swap as load, so readers never see a partial table. Returns
+    * (files before, files after, rows).
     */
   def compact(name: String, targetBytes: Long = 128L * 1024 * 1024)
   : (Long, Long, Long) = {
     val path = warehousePath(name)
+    // before the read: a pending committed append must be in the rewrite
+    recoverIfCrashed(path)
     val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     require(fs.exists(p), s"no warehouse table $name")
@@ -243,7 +255,7 @@ class Warehouse(spark: SparkSession, cfg: GraftConfig,
     // degenerate-path fallback via Tables.observedCount (never hang the
     // maintenance command on a zero-task or cancelled job).
     val obs = org.apache.spark.sql.Observation()
-    writeAtomic(spark.read.parquet(path).repartition(nFiles)
+    writeAtomic(Tables.parquet(spark, path).repartition(nFiles)
       .observe(obs, org.apache.spark.sql.functions.count(
         org.apache.spark.sql.functions.lit(1)).as("n")), path)
     val rows = Tables.observedCount(obs, spark.read.parquet(path).count())
@@ -262,9 +274,10 @@ class Warehouse(spark: SparkSession, cfg: GraftConfig,
   /** Publish the CURRENT warehouse table as the next snapshot version. */
   def snapshotPublish(name: String): Long = {
     val path = warehousePath(name)
+    recoverIfCrashed(path)
     require(Catalog.tableExists(spark, cfg.warehouseDir, name),
       s"no warehouse table $name to snapshot")
-    Tables.publishVersion(spark, spark.read.parquet(path),
+    Tables.publishVersion(spark, Tables.parquet(spark, path),
       snapshotRoot(name))
   }
 
@@ -295,8 +308,9 @@ class Warehouse(spark: SparkSession, cfg: GraftConfig,
     *    `Merge.merge` the batch sync uses) with an atomic staged swap.
     *    Merge is idempotent, so a crash-replayed batch lands unchanged —
     *    the exactly-once story needs no batch log here.
-    *  - `primary_key` only → pk anti-join append (already-landed keys
-    *    drop, so replay is idempotent the same way).
+    *  - `primary_key` only → pk anti-join append through
+    *    [[appendAtomic]]: only the batch's new keys are written, and
+    *    already-landed keys drop, so replay is idempotent the same way.
     *  - unconfigured / reload-only → raw file landing under per-batch
     *    prefixes (the original append shape; no row ever rewrites).
     */
@@ -307,36 +321,36 @@ class Warehouse(spark: SparkSession, cfg: GraftConfig,
     require(fs.exists(p) && fs.getFileStatus(p).isDirectory,
       s"watch needs a directory source (a landing zone): $src")
     val ckpt = s"${cfg.dataDir}/${name}_watch_ckpt"
-    // The merge/append land functions reference the micro-batch on BOTH
-    // sides of their plan (anti-join + union), which double-counts the
-    // file source's numInputRows — so these paths count drained rows
+    val path = warehousePath(name)
+    // The merge land function references the micro-batch on BOTH sides
+    // of its plan (anti-join + union), which double-counts the file
+    // source's numInputRows — so the keyed paths count drained rows
     // themselves (one cached count per batch; the write reuses the cache)
     // instead of trusting the listener total.
-    def landVia(land: DataFrame => DataFrame): Long = {
+    def landVia(land: DataFrame => Unit): Long = {
       val drained = new java.util.concurrent.atomic.AtomicLong(0)
       graft.streaming.StreamingSync.incrementalFileSyncVia(spark, src, ckpt) {
         (batch, _) =>
           val b = batch.persist()
           try {
             drained.addAndGet(b.count())
-            writeAtomic(land(b), warehousePath(name))
+            land(b)
           } finally { b.unpersist(); () }
       }
       drained.get
     }
     strategyFor(name) match {
       case SyncStrategy.Upsert(pks, lm) => landVia { batch =>
-        warehouseTable(name) match {
+        writeAtomic(warehouseTable(name) match {
           case Some(tgt) => Merge.merge(tgt, batch, pks, lm)
           case None => Merge.merge(
             batch.limit(0), batch, pks, lm) // bootstrap: in-batch dedup only
-        }
+        }, path)
       }
       case SyncStrategy.AppendOnly(pks) => landVia { batch =>
         warehouseTable(name) match {
-          case Some(tgt) =>
-            tgt.unionByName(batch.join(tgt, pks, "left_anti"))
-          case None => batch
+          case Some(tgt) => appendAtomic(batch.join(tgt, pks, "left_anti"), path)
+          case None => writeAtomic(batch, path)
         }
       }
       // skip is the operator's do-not-touch instruction — the batch
@@ -344,8 +358,7 @@ class Warehouse(spark: SparkSession, cfg: GraftConfig,
       // into the raw-landing branch and appended anyway)
       case SyncStrategy.Skip => 0L
       case _ =>
-        graft.streaming.StreamingSync.incrementalFileSync(spark, src,
-          warehousePath(name), ckpt)
+        graft.streaming.StreamingSync.incrementalFileSync(spark, src, path, ckpt)
     }
   }
 
@@ -495,16 +508,57 @@ class Warehouse(spark: SparkSession, cfg: GraftConfig,
     ()
   }
 
-  /** Crash recovery for [[writeAtomic]]'s one exposed window: a crash
-    * between rename(live, .__old) and rename(.__tmp, live) leaves the
-    * history ONLY at `.__old` — and before this hook, the next command
-    * silently treated the table as absent (a watch() merge then
-    * bootstrapped from one micro-batch and the following writeAtomic
-    * deleted the preserved copy, discarding history for good). On entry,
-    * if the live path is missing but `.__old` exists, rename it back —
-    * both the readers ([[warehouseTable]]) and the writer
-    * ([[writeAtomic]]) call this, so whichever touches the table first
-    * after the crash restores it.
+  /** Append commit: land `rows` next to the live table's files without
+    * rewriting them. Only the rows are written, to the `.__append` stage;
+    * Spark's job commit writes the stage's `_SUCCESS` marker last, so the
+    * marker is the commit point. The committed part files then move into
+    * the live directory one rename each, and the stage is dropped. A crash
+    * anywhere is settled by [[recoverIfCrashed]]: before the marker the
+    * append never happened, after it the append completes — the table is
+    * either the old one or the old one plus the whole delta.
+    */
+  private def appendAtomic(rows: DataFrame, path: String): Unit = {
+    recoverIfCrashed(path)
+    rows.write.mode("overwrite").parquet(path + ".__append")
+    finishAppend(path)
+  }
+
+  /** Move a committed append stage's part files into the live table and
+    * drop the stage. A part file with no rows stays behind (Spark writes
+    * one for partition 0 even when it is empty), so a zero-row delta adds
+    * no file to the table.
+    */
+  private def finishAppend(path: String): Unit = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val live = new Path(path)
+    val stage = new Path(path + ".__append")
+    val fs = live.getFileSystem(conf)
+    fs.listStatus(stage)
+      .filter(f => f.getPath.getName.endsWith(".parquet") &&
+        Tables.footer(conf, f).getBlocks.asScala.map(_.getRowCount).sum > 0)
+      .foreach { f =>
+        val dst = new Path(live, f.getPath.getName)
+        require(fs.rename(f.getPath, dst),
+          s"append commit: cannot move ${f.getPath} -> $dst")
+      }
+    fs.delete(stage, true)
+    ()
+  }
+
+  /** Crash recovery for the two commits, run before every warehouse read
+    * and write ([[warehouseTable]], [[writeAtomic]], [[appendAtomic]],
+    * `compact`, `snapshotPublish`), so whichever touches the table first
+    * after a crash settles it:
+    *  - [[writeAtomic]]'s one exposed window: a crash between
+    *    rename(live, .__old) and rename(.__tmp, live) leaves the history
+    *    ONLY at `.__old` — and before this hook, the next command silently
+    *    treated the table as absent (a watch() merge then bootstrapped
+    *    from one micro-batch and the following writeAtomic deleted the
+    *    preserved copy, discarding history for good). If the live path is
+    *    missing but `.__old` exists, rename it back.
+    *  - [[appendAtomic]]: a stage with `_SUCCESS` is committed, so the
+    *    rest of its files move in; a stage without it, or beside no live
+    *    table, is deleted.
     */
   private def recoverIfCrashed(path: String): Unit = {
     val p = new Path(path)
@@ -513,5 +567,9 @@ class Warehouse(spark: SparkSession, cfg: GraftConfig,
     if (!fs.exists(p) && fs.exists(old))
       require(fs.rename(old, p),
         s"crash recovery: cannot restore preserved table $old -> $p")
+    val stage = new Path(path + ".__append")
+    if (fs.exists(p) && fs.exists(new Path(stage, "_SUCCESS"))) finishAppend(path)
+    else fs.delete(stage, true)
+    ()
   }
 }

@@ -2,11 +2,14 @@ package graft.io
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.LogicalTypeAnnotation
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+  ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
 
 /** Sources & sinks (reference operators S1-S6, SURVEY §2.1).
@@ -27,37 +30,70 @@ import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, Times
   */
 object Tables {
 
-  /** Columns whose parquet footer marks them TIMESTAMP(NANOS), per table
-    * path. Cached — one footer read per path, ever; footers are metadata
-    * (no data scan) so this is cheap at any scale.
+  /** The footer Spark's schema inference reads for a parquet table: the
+    * file itself, or the first data file by path of a flat directory
+    * (ParquetUtils.inferSchema touches `data.headOption` of the sorted
+    * leaf files). Read here on the driver, it costs one file open; Spark's
+    * inference runs a job for the same read. None when the path is
+    * missing, or is a directory with no visible data file or with
+    * partition subdirectories, or when the session merges schemas across
+    * files: Spark infers (or rejects) those itself.
     */
-  private val nsColsCache =
-    scala.collection.concurrent.TrieMap.empty[String, Seq[String]]
+  private def schemaFooter(spark: SparkSession, path: String): Option[Footer] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val p = new Path(path)
+    val fs = p.getFileSystem(conf)
+    val status =
+      if (spark.sessionState.conf.isParquetSchemaMergingEnabled) None
+      else try Some(fs.getFileStatus(p))
+      catch { case _: java.io.FileNotFoundException => None }
+    val file = status.flatMap { st =>
+      if (st.isFile) Some(st)
+      else {
+        val visible = fs.listStatus(p).filterNot { f =>
+          val n = f.getPath.getName
+          n.startsWith("_") || n.startsWith(".")
+        }
+        if (visible.exists(_.isDirectory)) None
+        else visible.sortBy(_.getPath.toString).headOption
+      }
+    }
+    file.map(f => new Footer(f.getPath, footer(conf, f)))
+  }
+
+  /** One parquet file's footer, row groups included. */
+  private[graft] def footer(conf: org.apache.hadoop.conf.Configuration,
+                            file: FileStatus): ParquetMetadata = {
+    val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(file, conf))
+    try reader.getFooter finally reader.close()
+  }
+
+  /** A parquet table read with its schema from [[schemaFooter]], converted
+    * as Spark's own inference converts it, so building the DataFrame
+    * starts no Spark job.
+    */
+  def parquet(spark: SparkSession, path: String): DataFrame =
+    readFooted(spark, path, schemaFooter(spark, path))
+
+  private def readFooted(spark: SparkSession, path: String,
+                         footer: Option[Footer]): DataFrame =
+    footer.fold(spark.read.parquet(path)) { f =>
+      spark.read.schema(ParquetFileFormat.readSchemaFromFooter(f,
+        new ParquetToSparkSchemaConverter(spark.sessionState.conf))).parquet(path)
+    }
+
+  /** Columns a parquet footer marks TIMESTAMP(NANOS). */
+  private def nsCols(footer: Footer): Seq[String] =
+    footer.getParquetMetadata.getFileMetaData.getSchema.getFields.asScala.collect {
+      case f if f.isPrimitive && (f.getLogicalTypeAnnotation match {
+        case t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
+          t.getUnit == LogicalTypeAnnotation.TimeUnit.NANOS
+        case _ => false
+      }) => f.getName
+    }.toSeq
 
   private[graft] def nsTimestampCols(spark: SparkSession, path: String): Seq[String] =
-    nsColsCache.getOrElseUpdate(path, {
-      val conf = spark.sparkContext.hadoopConfiguration
-      val p = new Path(path)
-      val fs = p.getFileSystem(conf)
-      val fileOpt =
-        if (fs.getFileStatus(p).isDirectory)
-          fs.listStatus(p).map(_.getPath)
-            .find(_.getName.endsWith(".parquet"))
-        else Some(p)
-      fileOpt.fold(Seq.empty[String]) { file =>
-        val reader =
-          ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
-        try {
-          reader.getFooter.getFileMetaData.getSchema.getFields.asScala.collect {
-            case f if f.isPrimitive && (f.getLogicalTypeAnnotation match {
-              case t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
-                t.getUnit == LogicalTypeAnnotation.TimeUnit.NANOS
-              case _ => false
-            }) => f.getName
-          }.toSeq
-        } finally reader.close()
-      }
-    })
+    schemaFooter(spark, path).fold(Seq.empty[String])(nsCols)
 
   /** S1 on the test corpus: path-addressed parquet table.
     *
@@ -72,10 +108,11 @@ object Tables {
     */
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val path = s"$sfDir/$name.parquet"
-    val df = spark.read.parquet(path)
+    val footer = schemaFooter(spark, path)
+    val df = readFooted(spark, path, footer)
     val longNames = df.schema.fields
       .collect { case f if f.dataType == LongType => f.name }.toSet
-    val nsFixed = nsTimestampCols(spark, path).filter(longNames)
+    val nsFixed = footer.fold(Seq.empty[String])(nsCols).filter(longNames)
       .foldLeft(df) { (d, c) =>
         d.withColumn(c, org.apache.spark.sql.functions.timestamp_micros(
           org.apache.spark.sql.functions.expr(s"`$c` div 1000")))

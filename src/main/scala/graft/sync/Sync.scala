@@ -9,9 +9,9 @@ import org.apache.spark.sql.expressions.Window
   * full-load degradation (clickhouse_backend.py:210-226).
   *
   * Scale: a single-column max is a partial-aggregated scan (map-side combine,
-  * one row shuffled per partition) — O(1) result regardless of table size, and
-  * parquet column statistics let Spark answer it from footer metadata when the
-  * scan is a plain column max.
+  * one row shuffled per partition) — O(1) result regardless of table size,
+  * but an aggregate job on every read: the v1 parquet source does not answer
+  * `max` from footer statistics, it reads the column.
   */
 object Watermark {
   /** Max of an orderable column; None on empty input (→ caller degrades to
