@@ -73,7 +73,8 @@ object LocalSession {
         sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "5000"))
       .config("spark.ui.enabled", "false")
       .config("spark.sql.session.timeZone", "UTC")
-      // corpus events.ts is ns-precision parquet; see graft.io.Tables.table
+      // TIMESTAMP(NANOS) parquet columns surface as longs that
+      // graft.io.Tables.read restores to timestamps
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       // naive (no-tz) parquet timestamps surface as TimestampType, not NTZ:
       // with session TZ pinned to UTC the instant equals the wall-clock, so

@@ -24,7 +24,7 @@ class Warehouse(spark: SparkSession, cfg: GraftConfig,
                   * schedules are testable on any wall-clock day. */
                 today: () => java.time.LocalDate = () => java.time.LocalDate.now()) {
 
-  private val engine = new SyncEngine(spark)
+  private val engine = new SyncEngine
 
   private def warehousePath(name: String) = s"${cfg.warehouseDir}/$name.parquet"
   private def chunkDir(name: String) = s"${cfg.dataDir}/${name}_data"
@@ -258,7 +258,7 @@ class Warehouse(spark: SparkSession, cfg: GraftConfig,
     writeAtomic(Tables.parquet(spark, path).repartition(nFiles)
       .observe(obs, org.apache.spark.sql.functions.count(
         org.apache.spark.sql.functions.lit(1)).as("n")), path)
-    val rows = Tables.observedCount(obs, spark.read.parquet(path).count())
+    val rows = Tables.observedCount(obs, Tables.parquet(spark, path).count())
     (before.length.toLong, dataFiles.length.toLong, rows)
   }
 
@@ -315,11 +315,7 @@ class Warehouse(spark: SparkSession, cfg: GraftConfig,
     *    prefixes (the original append shape; no row ever rewrites).
     */
   def watch(name: String): Long = {
-    val src = s"${cfg.sourceDir}/$name.parquet"
-    val p = new Path(src)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(p) && fs.getFileStatus(p).isDirectory,
-      s"watch needs a directory source (a landing zone): $src")
+    val src = landingZone(name)
     val ckpt = s"${cfg.dataDir}/${name}_watch_ckpt"
     val path = warehousePath(name)
     // The merge land function references the micro-batch on BOTH sides
@@ -360,6 +356,17 @@ class Warehouse(spark: SparkSession, cfg: GraftConfig,
       case _ =>
         graft.streaming.StreamingSync.incrementalFileSync(spark, src, path, ckpt)
     }
+  }
+
+  /** The source directory new files land in, which both `watch` paths
+    * drain. */
+  private def landingZone(name: String): String = {
+    val src = s"${cfg.sourceDir}/$name.parquet"
+    val p = new Path(src)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    require(fs.exists(p) && fs.getFileStatus(p).isDirectory,
+      s"watch needs a directory source (a landing zone): $src")
+    src
   }
 
   // ───────────────────────── DuckDB warehouse ─────────────────────────
@@ -413,11 +420,7 @@ class Warehouse(spark: SparkSession, cfg: GraftConfig,
     // same do-not-touch contract as watch(): a skipped table must not
     // even be created in the warehouse engine
     if (strategy == SyncStrategy.Skip) return 0L
-    val src = s"${cfg.sourceDir}/$name.parquet"
-    val p = new Path(src)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(p) && fs.getFileStatus(p).isDirectory,
-      s"watch needs a directory source (a landing zone): $src")
+    val src = landingZone(name)
     val schema = capturedSchema(name)
     duck.createTable(name, schema, opts(name).pks)
     // keyed tables land via `INSERT OR REPLACE` (the engine resolves on

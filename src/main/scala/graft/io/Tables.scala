@@ -7,9 +7,10 @@ import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
 import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.LogicalTypeAnnotation
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, Observation, Row, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
   ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.functions.{count, expr, lit, timestamp_micros}
 import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
 
 /** Sources & sinks (reference operators S1-S6, SURVEY §2.1).
@@ -68,19 +69,58 @@ object Tables {
     try reader.getFooter finally reader.close()
   }
 
+  /** How [[read]] reads a parquet path: one batch read, or a file-source
+    * stream of `dir` (the path, or a directory exposing it) whose
+    * micro-batches `graft.stream.maxFilesPerTrigger` caps. */
+  sealed trait Scan
+  object Scan {
+    case object Batch extends Scan
+    final case class Stream(dir: String) extends Scan
+  }
+
   /** A parquet table read with its schema from [[schemaFooter]], converted
     * as Spark's own inference converts it, so building the DataFrame
-    * starts no Spark job.
+    * starts no Spark job. Unlike [[read]], no column is repaired.
     */
   def parquet(spark: SparkSession, path: String): DataFrame =
-    readFooted(spark, path, schemaFooter(spark, path))
+    open(spark, path, schemaFooter(spark, path), Scan.Batch)
 
-  private def readFooted(spark: SparkSession, path: String,
-                         footer: Option[Footer]): DataFrame =
-    footer.fold(spark.read.parquet(path)) { f =>
-      spark.read.schema(ParquetFileFormat.readSchemaFromFooter(f,
-        new ParquetToSparkSchemaConverter(spark.sessionState.conf))).parquet(path)
+  /** A parquet path as a DataFrame, its schema from [[schemaFooter]] and
+    * every timestamp flavor a TimestampType. Sessions read
+    * TIMESTAMP(NANOS) as nanos-since-epoch longs (`nanosAsLong`); those
+    * become µs timestamps (`div 1000`, the truncation DuckDB's `epoch_us`
+    * applies). An inferTimestampNTZ session's TIMESTAMP_NTZ is cast; the
+    * session time zone is UTC, so the instant equals the wall-clock.
+    */
+  def read(spark: SparkSession, path: String, scan: Scan): DataFrame = {
+    val footer = schemaFooter(spark, path)
+    val ns = footer.fold(Seq.empty[String])(nsCols).toSet
+    val df = open(spark, path, footer, scan)
+    df.schema.fields.foldLeft(df) { (d, f) =>
+      val c = s"`${f.name}`"
+      f.dataType match {
+        case LongType if ns(f.name) =>
+          d.withColumn(f.name, timestamp_micros(expr(s"$c div 1000")))
+        case TimestampNTZType => d.withColumn(f.name, d(c).cast(TimestampType))
+        case _ => d
+      }
     }
+  }
+
+  private def open(spark: SparkSession, path: String, footer: Option[Footer],
+                   scan: Scan): DataFrame = {
+    val schema = footer.map(f => ParquetFileFormat.readSchemaFromFooter(f,
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf)))
+    scan match {
+      case Scan.Batch => schema.fold(spark.read)(spark.read.schema).parquet(path)
+      case Scan.Stream(dir) =>
+        val reader = spark.readStream
+          .schema(schema.getOrElse(spark.read.parquet(path).schema))
+        spark.conf.getOption("graft.stream.maxFilesPerTrigger")
+          .foreach(reader.option("maxFilesPerTrigger", _))
+        reader.parquet(dir)
+    }
+  }
 
   /** Columns a parquet footer marks TIMESTAMP(NANOS). */
   private def nsCols(footer: Footer): Seq[String] =
@@ -92,43 +132,11 @@ object Tables {
       }) => f.getName
     }.toSeq
 
-  private[graft] def nsTimestampCols(spark: SparkSession, path: String): Seq[String] =
-    schemaFooter(spark, path).fold(Seq.empty[String])(nsCols)
-
-  /** S1 on the test corpus: path-addressed parquet table.
-    *
-    * Nanosecond-precision parquet timestamps are illegal for Spark's
-    * vectorized reader; sessions set
-    * `spark.sql.legacy.parquet.nanosAsLong=true` so they surface as
-    * nanos-since-epoch longs, and this wrapper restores a proper
-    * TimestampType at µs precision for ANY column the parquet footer marks
-    * as TIMESTAMP(NANOS) (the corpus has no sub-µs components, so
-    * `div 1000` is exact). DuckDB reads the same columns natively as
-    * TIMESTAMP_NS and `epoch_us` truncates identically.
+  /** S1 on the test corpus: the path-addressed parquet table, read and
+    * repaired by [[read]].
     */
-  def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    val path = s"$sfDir/$name.parquet"
-    val footer = schemaFooter(spark, path)
-    val df = readFooted(spark, path, footer)
-    val longNames = df.schema.fields
-      .collect { case f if f.dataType == LongType => f.name }.toSet
-    val nsFixed = footer.fold(Seq.empty[String])(nsCols).filter(longNames)
-      .foldLeft(df) { (d, c) =>
-        d.withColumn(c, org.apache.spark.sql.functions.timestamp_micros(
-          org.apache.spark.sql.functions.expr(s"`$c` div 1000")))
-      }
-    // Flavor repair #2: naive parquet timestamps that an inferTimestampNTZ
-    // session surfaced as TIMESTAMP_NTZ become TimestampType here too, so
-    // the loader's contract — "any timestamp flavor the source emits is a
-    // usable TimestampType" — holds regardless of session config. Session
-    // TZ is UTC, so the cast maps the naive wall-clock to the identical
-    // instant (the exact semantics DuckDB's naive `epoch_us` applies).
-    nsFixed.schema.fields
-      .collect { case f if f.dataType == TimestampNTZType => f.name }
-      .foldLeft(nsFixed) { (d, c) =>
-        d.withColumn(c, d(s"`$c`").cast(TimestampType))
-      }
-  }
+  def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
+    read(spark, s"$sfDir/$name.parquet", Scan.Batch)
 
   /** S1 real-source path: filtered JDBC scan. The `filter` lands inside the
     * pushed-down query exactly like the reference injects its incremental
@@ -160,7 +168,7 @@ object Tables {
     * degenerate path — never on the source, which may be a full-table
     * JDBC read).
     */
-  private[graft] def observedCount(obs: org.apache.spark.sql.Observation,
+  private[graft] def observedCount(obs: Observation,
                                    fallback: => Long,
                                    timeoutSec: Int = 30): Long =
     try {
@@ -232,22 +240,28 @@ object Tables {
     */
   def writeCsvChunks(df: DataFrame, dir: String,
                      maxRecordsPerFile: Long = 1000000L,
-                     maxRecords: Option[Long] = None): Long = {
-    import org.apache.spark.sql.Observation
-    import org.apache.spark.sql.functions.{count, lit}
+                     maxRecords: Option[Long] = None): Long =
+    observedWrite(df, "gzip", maxRecordsPerFile, maxRecords)(
+      _.option("header", "true").option("timestampFormat", TimestampFormat).csv(dir))(
+      readCsvChunks(df.sparkSession, dir, df.schema))
+
+  /** Cap, widen and count inside the write job; `write` makes the
+    * format's own call, `written` is read back only if no count arrives. */
+  private def observedWrite(df: DataFrame, compression: String,
+                            maxRecordsPerFile: Long, maxRecords: Option[Long])
+                           (write: DataFrameWriter[Row] => Unit)
+                           (written: => DataFrame): Long = {
     val capped = maxRecords.fold(df)(n =>
       df.limit(math.min(n, Int.MaxValue.toLong).toInt))
     val obs = Observation()
-    widenForEncode(capped).observe(obs, count(lit(1)).as("n"))
+    write(widenForEncode(capped).observe(obs, count(lit(1)).as("n"))
       .write.mode("overwrite")
-      .option("header", "true")
-      .option("compression", "gzip")
-      .option("maxRecordsPerFile", maxRecordsPerFile)
-      .option("timestampFormat", "yyyy-MM-dd HH:mm:ss.SSSSSS")
-      .csv(dir)
-    observedCount(obs,
-      readCsvChunks(df.sparkSession, dir, df.schema).count())
+      .option("compression", compression)
+      .option("maxRecordsPerFile", maxRecordsPerFile))
+    observedCount(obs, written.count())
   }
+
+  private val TimestampFormat = "yyyy-MM-dd HH:mm:ss.SSSSSS"
 
   /** S3: CSV chunk source. Schema is pinned (the reference trusts DDL, never
     * infers: duckdb_backend.py:107 `COPY ... (HEADER)`); chunk file order is
@@ -256,7 +270,7 @@ object Tables {
   def readCsvChunks(spark: SparkSession, dir: String, schema: StructType): DataFrame =
     spark.read.schema(schema)
       .option("header", "true")
-      .option("timestampFormat", "yyyy-MM-dd HH:mm:ss.SSSSSS")
+      .option("timestampFormat", TimestampFormat)
       .csv(dir)
 
   /** ORC twin of the parquet sink — the second columnar interchange format
@@ -264,17 +278,9 @@ object Tables {
     * observed-count contract as the chunk writers.
     */
   def writeOrc(df: DataFrame, dir: String,
-               maxRecordsPerFile: Long = 1000000L): Long = {
-    import org.apache.spark.sql.Observation
-    import org.apache.spark.sql.functions.{count, lit}
-    val obs = Observation()
-    widenForEncode(df).observe(obs, count(lit(1)).as("n"))
-      .write.mode("overwrite")
-      .option("compression", "zlib")
-      .option("maxRecordsPerFile", maxRecordsPerFile)
-      .orc(dir)
-    observedCount(obs, readOrc(df.sparkSession, dir).count())
-  }
+               maxRecordsPerFile: Long = 1000000L): Long =
+    observedWrite(df, "zlib", maxRecordsPerFile, None)(_.orc(dir))(
+      readOrc(df.sparkSession, dir))
 
   def readOrc(spark: SparkSession, dir: String): DataFrame =
     spark.read.orc(dir)
@@ -396,26 +402,15 @@ object Tables {
     */
   def writeJsonlChunks(df: DataFrame, dir: String,
                        maxRecordsPerFile: Long = 1000000L,
-                       maxRecords: Option[Long] = None): Long = {
-    import org.apache.spark.sql.Observation
-    import org.apache.spark.sql.functions.{count, lit}
-    val capped = maxRecords.fold(df)(n =>
-      df.limit(math.min(n, Int.MaxValue.toLong).toInt))
-    val obs = Observation()
-    widenForEncode(capped).observe(obs, count(lit(1)).as("n"))
-      .write.mode("overwrite")
-      .option("compression", "gzip")
-      .option("maxRecordsPerFile", maxRecordsPerFile)
-      .option("timestampFormat", "yyyy-MM-dd HH:mm:ss.SSSSSS")
-      .json(dir)
-    observedCount(obs,
-      readJsonlChunks(df.sparkSession, dir, df.schema).count())
-  }
+                       maxRecords: Option[Long] = None): Long =
+    observedWrite(df, "gzip", maxRecordsPerFile, maxRecords)(
+      _.option("timestampFormat", TimestampFormat).json(dir))(
+      readJsonlChunks(df.sparkSession, dir, df.schema))
 
   /** JSONL chunk source, schema pinned like the CSV twin. */
   def readJsonlChunks(spark: SparkSession, dir: String, schema: StructType): DataFrame =
     spark.read.schema(schema)
-      .option("timestampFormat", "yyyy-MM-dd HH:mm:ss.SSSSSS")
+      .option("timestampFormat", TimestampFormat)
       .json(dir)
 
   /** S4-S6 generalized: bulk append into a warehouse table over JDBC. */
@@ -475,7 +470,7 @@ object Tables {
     require(vs.nonEmpty, s"no published versions under $root")
     val v = version.getOrElse(vs.last)
     require(vs.contains(v), s"version $v not in ${vs.mkString(",")}")
-    spark.read.parquet(new Path(root, s"v=$v").toString)
+    parquet(spark, new Path(root, s"v=$v").toString)
   }
 
   /** Drop all but the newest `keep` versions; returns the dropped ones.

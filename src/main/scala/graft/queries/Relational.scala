@@ -927,7 +927,7 @@ object Relational {
     // ── SyncEngine end-to-end: append-only bootstrap + incremental ─────────
     "sync_append_e2e" -> Q(
       (s, d) => {
-        val engine = new SyncEngine(s)
+        val engine = new SyncEngine
         val src = t(s, d, "events")
         // pre-existing warehouse state; an EMPTY source has no watermark to
         // carve a stale sink from — the fixture degrades to an empty sink
@@ -947,7 +947,7 @@ object Relational {
     // ── SyncEngine end-to-end: last-modified upsert with stale sink ────────
     "sync_upsert_e2e" -> Q(
       (s, d) => {
-        val engine = new SyncEngine(s)
+        val engine = new SyncEngine
         val src = t(s, d, "events")
         // stale-sink fixture; empty source → empty sink, same degradation
         // as sync_append_e2e

@@ -50,23 +50,6 @@ object StreamingSync {
       if (k.startsWith("graft.stream.")) s.conf.set(k, v)
     }
     s.conf.set("spark.sql.shuffle.partitions", n)
-    // State-store provider A/B knob (r16, VERDICT r15 ask #2): unset keeps
-    // the HDFS-backed provider the twins document (whose per-batch delta
-    // commit IS the durability contract); "rocksdb" swaps in the RocksDB
-    // provider for a measured comparison. The A/B verdict is recorded in
-    // artifacts/stream_state_ab.md — at this corpus scale the per-drain
-    // RocksDB instance init dominates whatever the commit path saves, so
-    // the default stays HDFS; at 100 TB state volumes (state no longer
-    // fits the executor heap) RocksDB is the standard choice, which is
-    // why the knob exists rather than a hardcoded provider.
-    sys.env.get("SPARK_GRAFT_STATE_PROVIDER").foreach {
-      case "rocksdb" => s.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      case "hdfs" => () // the default provider; named for explicit A/Bs
-      case other => throw new IllegalArgumentException(
-        s"SPARK_GRAFT_STATE_PROVIDER must be 'rocksdb' or 'hdfs', got '$other'")
-    }
     // recentProgress is a ring buffer (default 100 entries): a backfill
     // draining in more micro-batches than that would silently drop its
     // early batches from the lastRunProgress observability hook. 10k
@@ -128,13 +111,10 @@ object StreamingSync {
     * DIRECTORY (a production table is one); the test corpus ships
     * single-file tables, so expose the file through a per-run directory of
     * symlinks (local filesystems only — a cluster source is a directory).
-    * ns-annotated Long columns are restored from the parquet footer exactly
-    * like graft.io.Tables.table.
     */
   private def tableStream(spark: SparkSession, sfDir: String, table: String,
                           base: String): DataFrame = {
     val path = s"$sfDir/$table.parquet"
-    val batchSchema = spark.read.parquet(path).schema
     val eventsPath = java.nio.file.Paths.get(path).toAbsolutePath
     val streamDir =
       if (java.nio.file.Files.isDirectory(eventsPath)) eventsPath.toString
@@ -145,32 +125,7 @@ object StreamingSync {
           d.resolve(s"$table.parquet"), eventsPath)
         d.toString
       }
-    // multi-batch drains (eviction tests; backfills that shouldn't land as
-    // one giant micro-batch) cap files per trigger; AvailableNow honors it
-    val reader = spark.readStream.schema(batchSchema)
-    spark.conf.getOption("graft.stream.maxFilesPerTrigger")
-      .foreach(reader.option("maxFilesPerTrigger", _))
-    val raw = reader.parquet(streamDir)
-    val longNames = batchSchema.fields.collect {
-      case f if f.dataType == org.apache.spark.sql.types.LongType => f.name
-    }.toSet
-    val nsFixed = graft.io.Tables.nsTimestampCols(spark, path)
-      .filter(longNames)
-      .foldLeft(raw)((d, c) =>
-        d.withColumn(c, timestamp_micros(expr(s"`$c` div 1000"))))
-    // flavor repair #2, same as Tables.table: an inferTimestampNTZ session
-    // surfaces naive parquet timestamps as TIMESTAMP_NTZ — without this
-    // cast the streaming twins would see a different ts type than every
-    // batch query in exactly those sessions (session TZ is UTC, so the
-    // cast maps the naive wall-clock to the identical instant)
-    nsFixed.schema.fields
-      .collect {
-        case f if f.dataType == org.apache.spark.sql.types.TimestampNTZType =>
-          f.name
-      }
-      .foldLeft(nsFixed)((d, c) =>
-        d.withColumn(c, d(s"`$c`")
-          .cast(org.apache.spark.sql.types.TimestampType)))
+    graft.io.Tables.read(spark, path, graft.io.Tables.Scan.Stream(streamDir))
   }
 
   private def eventsStream(spark: SparkSession, sfDir: String,
@@ -371,6 +326,7 @@ object StreamingSync {
                              outputMode: String = "update"): DataFrame = {
     val spark = agg.sparkSession
     val sinkDir = s"$base/sink"
+    val logSchema = agg.schema.add("batch_id", org.apache.spark.sql.types.LongType)
     drainAvailableNow(agg.writeStream
       .outputMode(outputMode)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -385,14 +341,14 @@ object StreamingSync {
       // later batch dropped (e.g. a session merged into an earlier start).
       // An empty source still commits a zero-row batch: max(batch_id) is
       // then NULL, which must degrade to the empty frame, not a NULL-read
-      val log = spark.read.parquet(sinkDir)
+      val log = spark.read.schema(logSchema).parquet(sinkDir)
       val last = log.agg(max(col("batch_id"))).head()
       if (last.isNullAt(0)) emptyLike(spark, agg.schema)
       else log.where(col("batch_id") === last.getLong(0)).drop("batch_id")
     } else {
       val w = Window.partitionBy(keyCols.map(col): _*)
         .orderBy(col("batch_id").desc)
-      spark.read.parquet(sinkDir)
+      spark.read.schema(logSchema).parquet(sinkDir)
         .withColumn("__rn", row_number().over(w)).where(col("__rn") === 1)
         .drop("__rn", "batch_id")
     }
@@ -790,19 +746,10 @@ object StreamingSync {
       .option("path", sinkDir), base, name)
     // a started query that emitted ZERO rows (normal under the watermarked
     // session path: every session still open at end of drain) leaves a
-    // _spark_metadata dir but no data files — read.parquet then fails
-    // schema inference, so that case degrades to the empty frame too
+    // _spark_metadata dir but no data files; read with the query's own
+    // schema, that is the empty frame
     if (!sinkExists(ss, sinkDir)) emptyLike(ss, df.schema)
-    else try ss.read.parquet(sinkDir)
-    catch {
-      // stable error class first (survives message rewording across Spark
-      // upgrades); English-text check kept only as a fallback for builds
-      // that throw this case without a condition set
-      case e: org.apache.spark.sql.AnalysisException
-          if e.getCondition == "UNABLE_TO_INFER_SCHEMA" ||
-            (e.getCondition == null && e.getMessage.contains("infer schema")) =>
-        emptyLike(ss, df.schema)
-    }
+    else ss.read.schema(df.schema).parquet(sinkDir)
   }
 
   private val _lastRunProgress =
@@ -1359,13 +1306,6 @@ object StreamingSync {
   def incrementalFileSyncVia(spark: SparkSession, srcDir: String,
                              checkpointDir: String)
                             (land: (DataFrame, Long) => Unit): Long = {
-    val schema = spark.read.parquet(srcDir).schema
-    // same knob as eventsStream: a large backfill drains in bounded
-    // micro-batches instead of one giant one (AvailableNow honors it)
-    val reader = spark.readStream.schema(schema)
-    spark.conf.getOption("graft.stream.maxFilesPerTrigger")
-      .foreach(reader.option("maxFilesPerTrigger", _))
-
     // The returned synced-row count is accumulated per batch by a
     // listener, NOT summed off q.recentProgress — that is a ring buffer
     // (spark.sql.streaming.numRecentProgressUpdates, default 100) and a
@@ -1387,7 +1327,8 @@ object StreamingSync {
     }
     spark.streams.addListener(listener)
     try {
-      val q = reader.parquet(srcDir)
+      val q = graft.io.Tables
+        .read(spark, srcDir, graft.io.Tables.Scan.Stream(srcDir))
         .writeStream
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
           land(batch, batchId)

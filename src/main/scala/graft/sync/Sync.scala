@@ -1,6 +1,6 @@
 package graft.sync
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -155,12 +155,12 @@ object SyncStep {
 
 /** Strategy interpreter mirroring `ClickHouseBackend.update_table` control flow
   * (clickhouse_backend.py:189-243): bootstrap-on-missing, watermark read from
-  * the sink, delta extract, merge-or-append, composite-PK rejection.
+  * the sink, delta extract, merge-or-append.
   *
   * [[plan]] is the one place a sync step is decided, for every warehouse;
   * [[sync]] lands it as the new sink DataFrame (the parquet warehouse).
   */
-class SyncEngine(spark: SparkSession) {
+class SyncEngine {
   import SyncStrategy._
 
   /** Result of one sync step: the new sink contents and the action. */
@@ -214,16 +214,8 @@ class SyncEngine(spark: SparkSession) {
   /** Composite keys are natively supported (the merge identity and the
     * anti-join delta are key-arity-agnostic) — an upgrade over the
     * reference, which rejects them for incremental strategies
-    * (clickhouse_backend.py:200-205; README.md:255-257). Set the Spark
-    * conf `graft.sync.strictSinglePk=true` to restore the reference-parity
-    * rejection.
+    * (clickhouse_backend.py:200-205; README.md:255-257).
     */
-  private def checkPks(pk: Seq[String]): Unit = {
+  private def checkPks(pk: Seq[String]): Unit =
     require(pk.nonEmpty, "incremental sync needs at least one key column")
-    val strict =
-      spark.conf.getOption("graft.sync.strictSinglePk").exists(_.toBoolean)
-    if (strict) require(pk.size == 1,
-      s"composite primary key ${pk.mkString(",")} rejected: " +
-        "graft.sync.strictSinglePk=true (reference parity, README.md:255-257)")
-  }
 }

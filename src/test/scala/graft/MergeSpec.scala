@@ -7,8 +7,7 @@ import graft.sync.{Merge, SyncEngine, SyncStrategy, Watermark}
 
 /** Merge identity + watermark semantics (SURVEY §7.4 hard parts): last-
   * writer-wins dedup, idempotence (merge(merge(t,d),d) == merge(t,d)),
-  * null-watermark degradation, composite-PK merge/append (with the
-  * reference-parity single-key rejection behind graft.sync.strictSinglePk).
+  * null-watermark degradation, composite-PK merge/append.
   */
 class MergeSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -66,7 +65,7 @@ class MergeSpec extends AnyFunSuite {
   }
 
   test("composite-PK upsert merges on the full key") {
-    val engine = new SyncEngine(spark)
+    val engine = new SyncEngine
     val target = Seq((1L, "a", 1, "t1a"), (1L, "b", 1, "t1b"),
       (2L, "a", 1, "t2a")).toDF("id", "sub", "ver", "payload")
     val source = Seq((1L, "a", 1, "t1a"), (1L, "b", 2, "NEW1b"),
@@ -81,7 +80,7 @@ class MergeSpec extends AnyFunSuite {
   }
 
   test("composite-PK append-only: anti-join delta adds only unseen keys") {
-    val engine = new SyncEngine(spark)
+    val engine = new SyncEngine
     val target = Seq((1L, "a", 1, "x"), (2L, "a", 1, "y"))
       .toDF("id", "sub", "ver", "payload")
     // (2,a) already present — must not duplicate; (2,b) and (9,a) are new
@@ -175,20 +174,15 @@ class MergeSpec extends AnyFunSuite {
         "be re-examined")
   }
 
-  test("graft.sync.strictSinglePk restores the reference-parity rejection") {
-    val engine = new SyncEngine(spark)
+  test("a composite key syncs by default: no single-key rejection") {
+    val engine = new SyncEngine
     val df = Seq((1L, "a", 1, "x")).toDF("id", "sub", "ver", "payload")
-    spark.conf.set("graft.sync.strictSinglePk", "true")
-    try intercept[IllegalArgumentException] {
-      engine.sync(df, Some(df), SyncStrategy.Upsert(Seq("id", "sub"), "ver"))
-    } finally spark.conf.unset("graft.sync.strictSinglePk")
-    // and with the flag off, the same call succeeds
     assert(engine.sync(df, Some(df),
       SyncStrategy.Upsert(Seq("id", "sub"), "ver")).action == "merge")
   }
 
   test("sync engine: bootstrap and zero-delta short-circuit") {
-    val engine = new SyncEngine(spark)
+    val engine = new SyncEngine
     val src = mkEvents(Seq((1L, 1, "a"), (2L, 1, "b")))
     val boot = engine.sync(src, None, SyncStrategy.AppendOnly("id"))
     assert(boot.action == "bootstrap" && rows(boot.table) == rows(src))
