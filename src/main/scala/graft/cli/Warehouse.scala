@@ -157,22 +157,36 @@ class Warehouse(spark: SparkSession, cfg: GraftConfig,
   /** `sync`: one incremental step per the table's strategy — bootstrap on
     * missing, watermark delta, merge-or-append (the reference's
     * `update_table` control flow, clickhouse_backend.py:189-243), decided
-    * by [[SyncEngine.plan]]. An append lands only the delta, through
-    * [[appendAtomic]]; a reload, bootstrap or merge rewrites the table
-    * through [[writeAtomic]]. Returns the action taken.
+    * by [[SyncEngine.plan]] and landed by [[land]]. Returns the action
+    * taken.
     */
   def sync(name: String): String = {
-    val path = warehousePath(name)
     val target = warehouseTable(name)
-    val step = engine.plan(sourceTable(name), strategyFor(name), target.map(Sink.of))
+    val step = engine.plan(sourceTable(name), strategyFor(name),
+      target.map(Sink.of), batch = false)
+    land(name, step, target, batchId = None)
+    step.action
+  }
+
+  /** Land one planned step in the parquet table `name` (now `target`): a
+    * reload, bootstrap or merge through [[writeAtomic]], an append or
+    * insert through [[appendAtomic]]. An unkeyed `watch` batch has no key
+    * to anti-join its replay away, so it appends under its `b<batchId>-`
+    * file prefix instead.
+    */
+  private def land(name: String, step: SyncStep, target: Option[DataFrame],
+                   batchId: Option[Long]): Unit = {
+    val path = warehousePath(name)
     step match {
       case SyncStep.Skip => ()
       case SyncStep.Replace(_, rows) => writeAtomic(rows, path)
-      case SyncStep.Append(rows) => appendAtomic(rows, path)
+      case SyncStep.Append(rows) => batchId.fold(appendAtomic(rows, path))(
+        graft.streaming.StreamingSync.commitBatchFiles(spark, rows, _, path))
+      case SyncStep.Insert(rows, pks) =>
+        appendAtomic(rows.join(target.get, pks, "left_anti"), path)
       case SyncStep.Upsert(rows, pks) =>
         writeAtomic(Merge.deleteInsert(target.get, rows, pks), path)
     }
-    step.action
   }
 
   /** `reload`: full extract + load with drop (pgwarehouse.py:191-194). */
@@ -302,59 +316,18 @@ class Warehouse(spark: SparkSession, cfg: GraftConfig,
     * rows). AvailableNow drains-and-stops, so the command composes with
     * any scheduler; a continuous deployment strips the trigger.
     *
-    * The landing mode follows the table's configured strategy:
-    *  - `primary_key` + `last_modified` → each micro-batch MERGES into
-    *    the warehouse table (last-writer by the lm column, the same
-    *    `Merge.merge` the batch sync uses) with an atomic staged swap.
-    *    Merge is idempotent, so a crash-replayed batch lands unchanged —
-    *    the exactly-once story needs no batch log here.
-    *  - `primary_key` only → pk anti-join append through
-    *    [[appendAtomic]]: only the batch's new keys are written, and
-    *    already-landed keys drop, so replay is idempotent the same way.
-    *  - unconfigured / reload-only → raw file landing under per-batch
-    *    prefixes (the original append shape; no row ever rewrites).
+    * Each micro-batch is planned and landed like a `sync` tick; a replay
+    * lands nothing new. Returns rows drained.
     */
   def watch(name: String): Long = {
-    val src = landingZone(name)
-    val ckpt = s"${cfg.dataDir}/${name}_watch_ckpt"
-    val path = warehousePath(name)
-    // The merge land function references the micro-batch on BOTH sides
-    // of its plan (anti-join + union), which double-counts the file
-    // source's numInputRows — so the keyed paths count drained rows
-    // themselves (one cached count per batch; the write reuses the cache)
-    // instead of trusting the listener total.
-    def landVia(land: DataFrame => Unit): Long = {
-      val drained = new java.util.concurrent.atomic.AtomicLong(0)
-      graft.streaming.StreamingSync.incrementalFileSyncVia(spark, src, ckpt) {
-        (batch, _) =>
-          val b = batch.persist()
-          try {
-            drained.addAndGet(b.count())
-            land(b)
-          } finally { b.unpersist(); () }
-      }
-      drained.get
-    }
-    strategyFor(name) match {
-      case SyncStrategy.Upsert(pks, lm) => landVia { batch =>
-        writeAtomic(warehouseTable(name) match {
-          case Some(tgt) => Merge.merge(tgt, batch, pks, lm)
-          case None => Merge.merge(
-            batch.limit(0), batch, pks, lm) // bootstrap: in-batch dedup only
-        }, path)
-      }
-      case SyncStrategy.AppendOnly(pks) => landVia { batch =>
-        warehouseTable(name) match {
-          case Some(tgt) => appendAtomic(batch.join(tgt, pks, "left_anti"), path)
-          case None => writeAtomic(batch, path)
-        }
-      }
-      // skip is the operator's do-not-touch instruction — the batch
-      // `sync` honors it, and so must the watch path (it previously fell
-      // into the raw-landing branch and appended anyway)
-      case SyncStrategy.Skip => 0L
-      case _ =>
-        graft.streaming.StreamingSync.incrementalFileSync(spark, src, path, ckpt)
+    val strategy = strategyFor(name)
+    // skip is the operator's do-not-touch instruction: nothing drains
+    if (strategy == SyncStrategy.Skip) return 0L
+    graft.streaming.StreamingSync.incrementalFileSyncVia(spark, landingZone(name),
+      s"${cfg.dataDir}/${name}_watch_ckpt") { (batch, batchId) =>
+      val target = warehouseTable(name)
+      land(name, engine.plan(batch, strategy, target.map(Sink.of), batch = true),
+        target, Some(batchId))
     }
   }
 
@@ -409,7 +382,7 @@ class Warehouse(spark: SparkSession, cfg: GraftConfig,
   /** `watch --backend duckdb`: the same checkpointed drain-and-stop as
     * `watch`, but each micro-batch lands in the live DuckDB table —
     * batch → gzip CSV chunks (the engine's interchange format) →
-    * transactional batch-logged COPY. The stream checkpoint makes file
+    * transactional batch-logged landing. The stream checkpoint makes file
     * progress survive restarts; the backend's batch log makes a crash
     * replay of an already-committed batch a no-op, so rows land exactly
     * once (the reference's cron-poll `sync` loop, README.md:217-225,
@@ -420,27 +393,11 @@ class Warehouse(spark: SparkSession, cfg: GraftConfig,
     // same do-not-touch contract as watch(): a skipped table must not
     // even be created in the warehouse engine
     if (strategy == SyncStrategy.Skip) return 0L
-    val src = landingZone(name)
-    val schema = capturedSchema(name)
-    duck.createTable(name, schema, opts(name).pks)
-    // keyed tables land via `INSERT OR REPLACE` (the engine resolves on
-    // the table's PRIMARY KEY), mirroring the parquet watch's strategy
-    // routing; unkeyed tables COPY-append. An upsert batch first reduces
-    // to the last writer per key, the rule every sync path shares (one
-    // statement may not replace a key twice)
-    val (keyed, lastWriters) = strategy match {
-      case SyncStrategy.Upsert(pks, lm) =>
-        (Some(schema), (b: DataFrame) => Merge.dedupChanges(b, pks, Seq(b(lm))))
-      case SyncStrategy.AppendOnly(_) => (Some(schema), identity[DataFrame] _)
-      case _ => (None, identity[DataFrame] _)
-    }
-    graft.streaming.StreamingSync.incrementalFileSyncVia(spark, src,
+    duck.createTable(name, capturedSchema(name), opts(name).pks)
+    graft.streaming.StreamingSync.incrementalFileSyncVia(spark, landingZone(name),
       s"${cfg.dataDir}/${name}_watch_duck_ckpt") { (batch, batchId) =>
-      val chunks = s"${cfg.dataDir}/${name}_watch_duck_b$batchId"
-      Tables.writeCsvChunks(lastWriters(batch), chunks)
-      duck.appendBatchIdempotent(name, batchId, chunks, keyed)
-      val cp = new Path(chunks)
-      cp.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(cp, true)
+      landDuck(name, engine.plan(batch, strategy, duckSink(name, duck),
+        batch = true), duck, Some(batchId))
     }
   }
 
@@ -451,14 +408,16 @@ class Warehouse(spark: SparkSession, cfg: GraftConfig,
   }
 
   /** `sync --backend duckdb`: the step [[SyncEngine.plan]] decides, with
-    * the watermark read from the WAREHOUSE side (duckdb_backend.py:129-197)
-    * and the step's rows extracted once: a reload or bootstrap lands
-    * through [[loadDuck]], an append COPYs the delta, a merge
-    * `INSERT OR REPLACE`s it. A zero-row delta is a `noop`. Returns the
-    * action taken.
+    * the watermark read from the WAREHOUSE side (duckdb_backend.py:129-197),
+    * landed by [[landDuck]]. Returns the action taken.
     */
-  def syncDuck(name: String, duck: DuckDbBackend): String = {
-    val sink = if (!duck.tableExists(name)) None else Some(new Sink {
+  def syncDuck(name: String, duck: DuckDbBackend): String =
+    landDuck(name, engine.plan(sourceTable(name), strategyFor(name),
+      duckSink(name, duck), batch = false), duck, batchId = None)
+
+  /** The DuckDB table as [[SyncEngine]] reads it; None when it is missing. */
+  private def duckSink(name: String, duck: DuckDbBackend): Option[Sink] =
+    if (!duck.tableExists(name)) None else Some(new Sink {
       def max(col: String): Option[Any] = duck.maxScalar(name, col)
       // watermark needs ONE monotone key, like the reference
       // (duckdb_backend.py:143-144); the composite anti-join delta has no
@@ -468,19 +427,38 @@ class Warehouse(spark: SparkSession, cfg: GraftConfig,
           s"duckdb append-only sync needs a single-column pk, got " +
             s"${pks.mkString(",")} (reference parity, duckdb_backend.py:143-144)")
     })
-    def landDelta(step: SyncStep, rows: DataFrame)(land: => Long): String =
-      if (extractRows(name, rows) == 0) "noop"
-      else { land; archiveChunks(name); step.action }
-    engine.plan(sourceTable(name), strategyFor(name), sink) match {
-      case SyncStep.Skip => "skip"
-      case SyncStep.Replace(action, rows) =>
+
+  /** Land one planned step in DuckDB from its rows, extracted once as
+    * gzip CSV: a tick's reload or bootstrap through [[loadDuck]], anything
+    * else by `COPY` (append), `INSERT OR IGNORE` (insert) or
+    * `INSERT OR REPLACE` (merge). A zero-row tick delta is a `noop`; a
+    * `watch` batch lands inside the backend's batch-log transaction.
+    * Returns the action taken.
+    */
+  private def landDuck(name: String, step: SyncStep, duck: DuckDbBackend,
+                       batchId: Option[Long]): String = {
+    import DuckDbBackend.Landing
+    def landed(rows: DataFrame, landing: Landing): String = batchId match {
+      case Some(id) =>
+        val chunks = s"${cfg.dataDir}/${name}_watch_duck_b$id"
+        Tables.writeCsvChunks(rows, chunks)
+        duck.appendBatchIdempotent(name, id, chunks, landing)
+        Catalog.dropPath(spark, chunks)
+        step.action
+      case None =>
+        if (extractRows(name, rows) == 0) "noop"
+        else { duck.land(name, chunkDir(name), landing); archiveChunks(name); step.action }
+    }
+    step match {
+      case SyncStep.Skip => step.action
+      case SyncStep.Replace(action, rows) if batchId.isEmpty =>
         extractRows(name, rows)
         loadDuck(name, duck)
         action
-      case step @ SyncStep.Append(rows) =>
-        landDelta(step, rows)(duck.loadChunks(name, chunkDir(name)))
-      case step @ SyncStep.Upsert(rows, _) =>
-        landDelta(step, rows)(duck.mergeChunks(name, chunkDir(name), rows.schema))
+      case SyncStep.Replace(_, rows) => landed(rows, Landing.Copy)
+      case SyncStep.Append(rows) => landed(rows, Landing.Copy)
+      case SyncStep.Insert(rows, _) => landed(rows, Landing.Ignore(rows.schema))
+      case SyncStep.Upsert(rows, _) => landed(rows, Landing.Replace(rows.schema))
     }
   }
 

@@ -55,7 +55,7 @@ object StreamingSync {
     // early batches from the lastRunProgress observability hook. 10k
     // progress objects ≈ a few tens of MB — bounded, and far past any
     // AvailableNow drain the operators run. (Row COUNTS never depend on
-    // this buffer — incrementalFileSync accumulates them via a listener.)
+    // this buffer — incrementalFileSyncVia counts each batch it lands.)
     s.conf.set("spark.sql.streaming.numRecentProgressUpdates", "10000")
     s
   }
@@ -1234,8 +1234,7 @@ object StreamingSync {
     * new data arrives moves only the delta, like the reference's
     * `WHERE pk > max(pk)` loop but with the offset tracked by the engine).
     * `Trigger.AvailableNow` drains what's there and stops — the reference's
-    * externally-scheduled batch contract. Returns rows appended this run,
-    * from the query's own progress counters (no sink rescans).
+    * externally-scheduled batch contract. Returns rows appended this run.
     *
     * The sink is a foreachBatch plain parquet append, NOT a
     * FileStreamSink: the file sink's `_spark_metadata` log makes every
@@ -1253,47 +1252,44 @@ object StreamingSync {
     * SAME table can see a partially renamed batch; the reference's
     * cron-poll shape runs drains sequentially, so this trades an unused
     * guarantee for batch/stream interop.) A `_spark_metadata` left by
-    * pre-round-10 runs is deleted on entry for the same reason.
+    * pre-round-10 runs is deleted for the same reason.
     */
   def incrementalFileSync(spark: SparkSession, srcDir: String,
-                          sinkDir: String, checkpointDir: String): Long = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    // migrate away from any FileStreamSink-era metadata log: once present,
-    // it makes batch reads resolve ONLY stream-committed files
-    locally {
-      val meta = new org.apache.hadoop.fs.Path(sinkDir, "_spark_metadata")
-      val fs = meta.getFileSystem(hconf)
-      if (fs.exists(meta)) fs.delete(meta, true)
-    }
-    incrementalFileSyncVia(spark, srcDir, checkpointDir) { (batch, batchId) =>
-      val sink = new org.apache.hadoop.fs.Path(sinkDir)
-      val fs = sink.getFileSystem(hconf)
-      fs.mkdirs(sink)
-      // idempotent replay: clear this batch's prefix before landing it
-      val prefix = s"b$batchId-"
-      fs.listStatus(sink).map(_.getPath)
-        .filter(_.getName.startsWith(prefix))
-        .foreach(fs.delete(_, false))
-      // stage under a dot-dir (invisible to batch parquet readers),
-      // then rename each part file in under the batch prefix — rename
-      // is a metadata op, so commit cost is per-file, not per-byte
-      val stage = new org.apache.hadoop.fs.Path(sinkDir, s".stage_b$batchId")
-      batch.write.mode("overwrite").parquet(stage.toString)
-      fs.listStatus(stage).map(_.getPath)
-        .filter(_.getName.endsWith(".parquet"))
-        .foreach { f =>
-          val dst = new org.apache.hadoop.fs.Path(sink, prefix + f.getName)
-          // rename reports most failures by RETURNING FALSE, not
-          // throwing — ignoring it would let the stage delete below
-          // destroy the rows and the checkpoint still commit the batch:
-          // silent loss. Throwing here leaves the checkpoint uncommitted,
-          // so foreachBatch's at-least-once replay re-lands the batch
-          // (the prefix-clear above makes the replay idempotent).
-          require(fs.rename(f, dst), s"rename $f -> $dst failed; " +
-            "failing the batch so the checkpoint replays it")
-        }
-      fs.delete(stage, true)
-    }
+                          sinkDir: String, checkpointDir: String): Long =
+    incrementalFileSyncVia(spark, srcDir, checkpointDir)(
+      commitBatchFiles(spark, _, _, sinkDir))
+
+  /** [[incrementalFileSync]]'s exactly-once landing of one micro-batch. */
+  def commitBatchFiles(spark: SparkSession, batch: DataFrame, batchId: Long,
+                       sinkDir: String): Unit = {
+    val sink = new org.apache.hadoop.fs.Path(sinkDir)
+    val fs = sink.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.delete(new org.apache.hadoop.fs.Path(sink, "_spark_metadata"), true)
+    fs.mkdirs(sink)
+    // idempotent replay: clear this batch's prefix before landing it
+    val prefix = s"b$batchId-"
+    fs.listStatus(sink).map(_.getPath)
+      .filter(_.getName.startsWith(prefix))
+      .foreach(fs.delete(_, false))
+    // stage under a dot-dir (invisible to batch parquet readers),
+    // then rename each part file in under the batch prefix — rename
+    // is a metadata op, so commit cost is per-file, not per-byte
+    val stage = new org.apache.hadoop.fs.Path(sinkDir, s".stage_b$batchId")
+    batch.write.mode("overwrite").parquet(stage.toString)
+    fs.listStatus(stage).map(_.getPath)
+      .filter(_.getName.endsWith(".parquet"))
+      .foreach { f =>
+        val dst = new org.apache.hadoop.fs.Path(sink, prefix + f.getName)
+        // rename reports most failures by RETURNING FALSE, not
+        // throwing — ignoring it would let the stage delete below
+        // destroy the rows and the checkpoint still commit the batch:
+        // silent loss. Throwing here leaves the checkpoint uncommitted,
+        // so foreachBatch's at-least-once replay re-lands the batch
+        // (the prefix-clear above makes the replay idempotent).
+        require(fs.rename(f, dst), s"rename $f -> $dst failed; " +
+          "failing the batch so the checkpoint replays it")
+      }
+    fs.delete(stage, true)
   }
 
   /** The checkpointed drain-and-stop spine shared by every `watch` sink:
@@ -1302,59 +1298,35 @@ object StreamingSync {
     * idempotent — foreachBatch is at-least-once on crash replay; the
     * parquet sink uses per-batch file prefixes, the DuckDB sink a
     * batch-id log table). Returns rows drained this invocation.
+    * Each batch is cached, counted and landed from the cache: the source's
+    * `numInputRows` would count every scan, and a merge reads its batch
+    * twice (anti join and union).
     */
   def incrementalFileSyncVia(spark: SparkSession, srcDir: String,
                              checkpointDir: String)
                             (land: (DataFrame, Long) => Unit): Long = {
-    // The returned synced-row count is accumulated per batch by a
-    // listener, NOT summed off q.recentProgress — that is a ring buffer
-    // (spark.sql.streaming.numRecentProgressUpdates, default 100) and a
-    // backfill draining in more micro-batches than the cap would silently
-    // undercount. The listener buffers (runId, rows) for every event it
-    // sees and sums this query's runId after its terminated event, so no
-    // attach-before-start race and no cross-query bleed; the listener bus
-    // is FIFO, so observing the terminated event guarantees every earlier
-    // progress event for this run was already delivered.
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(java.util.UUID, Long)]
-    val terminated = new java.util.concurrent.ConcurrentHashMap[java.util.UUID, Boolean]
-    val listener = new org.apache.spark.sql.streaming.StreamingQueryListener {
-      import org.apache.spark.sql.streaming.StreamingQueryListener._
-      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
-      override def onQueryProgress(e: QueryProgressEvent): Unit =
-        seen.add((e.progress.runId, e.progress.numInputRows))
-      override def onQueryTerminated(e: QueryTerminatedEvent): Unit =
-        terminated.put(e.runId, true)
-    }
-    spark.streams.addListener(listener)
-    try {
-      val q = graft.io.Tables
-        .read(spark, srcDir, graft.io.Tables.Scan.Stream(srcDir))
-        .writeStream
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          land(batch, batchId)
-          ()
-        }
-        .option("checkpointLocation", checkpointDir)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      _lastRunProgress.set(q.recentProgress)
-      // keep lastRunPlan's "most recent run on this thread" contract —
-      // the other two runners set it; omitting it here left a plan audit
-      // after a file-sync drain inspecting the WRONG query's plan
-      _lastRunPlan.set(
-        org.apache.spark.sql.graft.StreamingBridge.lastExecutedPlan(q))
-      // bounded wait for the async bus to deliver this run's terminated
-      // event (and with it, FIFO, all of its progress events)
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!terminated.containsKey(q.runId) && System.nanoTime() < deadline)
-        Thread.sleep(10)
-      require(terminated.containsKey(q.runId),
-        s"streaming listener bus did not deliver termination of run ${q.runId} " +
-          "within 30s — synced-row count would be unreliable")
-      import scala.jdk.CollectionConverters._
-      seen.asScala.collect { case (id, n) if id == q.runId => n }.sum
-    } finally spark.streams.removeListener(listener)
+    val drained = new AtomicLong(0)
+    val q = graft.io.Tables
+      .read(spark, srcDir, graft.io.Tables.Scan.Stream(srcDir))
+      .writeStream
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        val b = batch.persist()
+        try {
+          drained.addAndGet(b.count())
+          land(b, batchId)
+        } finally { b.unpersist(); () }
+      }
+      .option("checkpointLocation", checkpointDir)
+      .outputMode("append")
+      .trigger(Trigger.AvailableNow())
+      .start()
+    q.awaitTermination()
+    _lastRunProgress.set(q.recentProgress)
+    // keep lastRunPlan's "most recent run on this thread" contract —
+    // the other two runners set it; omitting it here left a plan audit
+    // after a file-sync drain inspecting the WRONG query's plan
+    _lastRunPlan.set(
+      org.apache.spark.sql.graft.StreamingBridge.lastExecutedPlan(q))
+    drained.get
   }
 }

@@ -3,6 +3,7 @@ package graft.sync
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.catalyst.expressions.RowOrdering
 
 /** High-watermark reads (reference A2/A3): `SELECT max(pk)` /
   * `SELECT max(last_modified)` against the *sink*, with the null-watermark →
@@ -145,8 +146,12 @@ object SyncStep {
     * missing one. */
   final case class Replace(override val action: String, rows: DataFrame)
     extends SyncStep(action)
-  /** Append the rows: the delta past the key watermark. */
+  /** Append the rows: the delta past the key watermark, or an unkeyed
+    * batch. */
   final case class Append(rows: DataFrame) extends SyncStep("append")
+  /** Insert the rows (one per key) whose key the table lacks. */
+  final case class Insert(rows: DataFrame, pks: Seq[String])
+    extends SyncStep("append")
   /** Replace-or-insert the rows on `pks`: the `>=` delta, already reduced
     * to the last writer per key. */
   final case class Upsert(rows: DataFrame, pks: Seq[String])
@@ -157,7 +162,8 @@ object SyncStep {
   * (clickhouse_backend.py:189-243): bootstrap-on-missing, watermark read from
   * the sink, delta extract, merge-or-append.
   *
-  * [[plan]] is the one place a sync step is decided, for every warehouse;
+  * [[plan]] is the one place a sync step is decided, for every command and
+  * warehouse;
   * [[sync]] lands it as the new sink DataFrame (the parquet warehouse).
   */
 class SyncEngine {
@@ -166,46 +172,67 @@ class SyncEngine {
   /** Result of one sync step: the new sink contents and the action. */
   case class SyncResult(table: DataFrame, action: String)
 
-  /** Decide one sync step. `sink=None` models a not-yet-created warehouse
-    * table (bootstrap path, clickhouse_backend.py:190-195).
+  /** Decide one sync step for `rows`: the whole source table for a `sync`
+    * tick, or one drained micro-batch for a `watch` `batch`, which reads
+    * no watermark (the stream checkpoint already skipped old files).
+    * `sink=None` models a not-yet-created warehouse table (bootstrap path,
+    * clickhouse_backend.py:190-195). An upsert bootstrap and every keyed
+    * batch land one row per key: the last writer for an upsert table,
+    * [[oneRowPerKey]] for an append-only one.
     */
-  def plan(source: DataFrame, strategy: SyncStrategy, sink: Option[Sink]): SyncStep =
+  def plan(rows: DataFrame, strategy: SyncStrategy, sink: Option[Sink],
+           batch: Boolean): SyncStep =
     strategy match {
       case Skip => SyncStep.Skip
-      case Reload => SyncStep.Replace("reload", source)
-      case s: AppendOnly =>
-        checkPks(s.pks)
-        sink.fold[SyncStep](SyncStep.Replace("bootstrap", source)) { tgt =>
+      case Reload if batch => SyncStep.Append(rows)
+      case Reload => SyncStep.Replace("reload", rows)
+      case AppendOnly(pks) =>
+        checkPks(pks)
+        sink match {
+          // a tick copies a new-records-only source: it holds each key once
+          case None if !batch => SyncStep.Replace("bootstrap", rows)
+          case None => SyncStep.Replace("bootstrap", oneRowPerKey(rows, pks))
+          case Some(_) if batch => SyncStep.Insert(oneRowPerKey(rows, pks), pks)
           // single monotone key → watermark predicate (pushed into the
           // scan, the cheap path); composite key → anti join on the full
           // key (no lexicographic watermark exists in general). The anti
           // join shuffles only the key columns of the target and
           // AQE-broadcasts when the sink key set is small.
-          SyncStep.Append(s.pks match {
-            case Seq(pk) => Watermark.newerThan(source, pk, tgt.max(pk))
-            case pks => source.join(tgt.keys(pks), pks, "left_anti")
+          case Some(tgt) => SyncStep.Append(pks match {
+            case Seq(pk) => Watermark.newerThan(rows, pk, tgt.max(pk))
+            case _ => rows.join(tgt.keys(pks), pks, "left_anti")
           })
         }
-      case s: Upsert =>
-        checkPks(s.pks)
-        sink.fold[SyncStep](SyncStep.Replace("bootstrap", source)) { tgt =>
-          val delta = Watermark.modifiedSince(source, s.lastModified,
-            tgt.max(s.lastModified))
-          SyncStep.Upsert(
-            Merge.dedupChanges(delta, s.pks, Seq(delta(s.lastModified))), s.pks)
+      case Upsert(pks, lm) =>
+        checkPks(pks)
+        def lastWriters(df: DataFrame) = Merge.dedupChanges(df, pks, Seq(df(lm)))
+        sink match {
+          case None => SyncStep.Replace("bootstrap", lastWriters(rows))
+          case Some(_) if batch => SyncStep.Upsert(lastWriters(rows), pks)
+          case Some(tgt) => SyncStep.Upsert(
+            lastWriters(Watermark.modifiedSince(rows, lm, tgt.max(lm))), pks)
         }
     }
+
+  /** The greatest row per key by its orderable columns in order: an
+    * append-only table has no last-modified column, and arrival order
+    * must not decide which row every warehouse and replay keeps.
+    */
+  private def oneRowPerKey(rows: DataFrame, pks: Seq[String]): DataFrame =
+    Merge.dedupChanges(rows, pks, rows.schema.fields.toSeq
+      .filter(f => RowOrdering.isOrderable(f.dataType)).map(f => rows(f.name)))
 
   /** One sync step, landed as the new sink contents: append is target ∪
     * delta, merge is the [[Merge]] identity over the deduped delta.
     */
   def sync(source: DataFrame, sink: Option[DataFrame], strategy: SyncStrategy): SyncResult = {
-    val step = plan(source, strategy, sink.map(Sink.of))
+    val step = plan(source, strategy, sink.map(Sink.of), batch = false)
     // plan only appends or merges into a sink that exists
     val table = step match {
       case SyncStep.Skip => sink.getOrElse(source.limit(0))
       case SyncStep.Replace(_, rows) => rows
       case SyncStep.Append(rows) => sink.get.unionByName(rows)
+      case SyncStep.Insert(rows, pks) => sink.get.unionByName(rows.join(sink.get, pks, "left_anti"))
       case SyncStep.Upsert(rows, pks) => Merge.deleteInsert(sink.get, rows, pks)
     }
     SyncResult(table, step.action)

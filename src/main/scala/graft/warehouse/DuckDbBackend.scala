@@ -31,6 +31,7 @@ import graft.schema.WarehouseDdl
   * lifecycle has no connection reuse to win.
   */
 class DuckDbBackend(val dbPath: String) {
+  import DuckDbBackend.Landing
 
   private def withConn[A](f: Connection => A): A = {
     val c = DriverManager.getConnection(s"jdbc:duckdb:$dbPath")
@@ -117,48 +118,55 @@ class DuckDbBackend(val dbPath: String) {
   /** `COPY t FROM 'chunk' (HEADER)` (duckdb_backend.py:105-110; DuckDB
     * decompresses by extension). Chunk column order is the table's column
     * order — both derive from the same captured schema.
-    */
-  private def copySql(table: String)(chunk: java.io.File): String =
-    s"COPY ${ident(table)} FROM '${chunk.getAbsolutePath}' (HEADER)"
-
-  /** `INSERT OR REPLACE INTO t SELECT * FROM read_csv(...)`
+    *
+    * `INSERT OR REPLACE|IGNORE INTO t SELECT * FROM read_csv(...)`
     * (duckdb_backend.py:190-197) — DuckDB resolves conflicts on the
     * table's PRIMARY KEY. Unlike the reference's `read_csv_auto`, the read
     * is schema-PINNED via a `columns={...}` spec built from the captured
-    * schema (the engine-wide rule: interchange reads never re-infer).
+    * schema (the engine-wide rule: interchange reads never re-infer). One
+    * statement may not meet a key twice, so callers land one row per key.
     */
-  private def upsertSql(table: String, schema: StructType): java.io.File => String = {
-    val spec = schema.fields.map(f =>
-      s"'${WarehouseDdl.DuckDb.quoteName(f.name)}': " +
-        s"'${WarehouseDdl.DuckDb.colType(WarehouseDdl.pgName(f.dataType))}'")
-      .mkString("{", ", ", "}")
-    chunk => s"INSERT OR REPLACE INTO ${ident(table)} SELECT * FROM " +
-      s"read_csv('${chunk.getAbsolutePath}', header=true, columns=$spec)"
+  private def landingSql(table: String, landing: Landing)
+                        (chunk: java.io.File): String = landing match {
+    case Landing.Copy =>
+      s"COPY ${ident(table)} FROM '${chunk.getAbsolutePath}' (HEADER)"
+    case keyed: Landing.Keyed =>
+      val spec = keyed.schema.fields.map(f =>
+        s"'${WarehouseDdl.DuckDb.quoteName(f.name)}': " +
+          s"'${WarehouseDdl.DuckDb.colType(WarehouseDdl.pgName(f.dataType))}'")
+        .mkString("{", ", ", "}")
+      s"INSERT OR ${keyed.onConflict} INTO ${ident(table)} SELECT * FROM " +
+        s"read_csv('${chunk.getAbsolutePath}', header=true, columns=$spec)"
   }
 
   /** Run one landing statement per chunk in `chunkDir`, in name order.
     * Returns chunks landed.
     */
-  private def landChunks(s: Statement, chunkDir: String)
-                        (sql: java.io.File => String): Long = {
+  private def landChunks(s: Statement, table: String, chunkDir: String,
+                         landing: Landing): Long = {
     val files = chunkFiles(chunkDir)
-    files.foreach(f => s.execute(sql(f)))
+    files.foreach(f => s.execute(landingSql(table, landing)(f)))
     files.size.toLong
   }
 
-  /** Bulk-load every pending gzip CSV chunk with [[copySql]]. Returns
+  /** Bulk-load every pending gzip CSV chunk with `COPY`. Returns
     * chunks loaded.
     */
   def loadChunks(table: String, chunkDir: String): Long =
-    withStmt(landChunks(_, chunkDir)(copySql(table)))
+    withStmt(landChunks(_, table, chunkDir, Landing.Copy))
 
-  /** Keyed upsert of every pending chunk with [[upsertSql]]. One
-    * statement may not replace a key twice, so callers land at most one
-    * row per key: the last writer (graft.sync.Merge.dedupChanges).
-    */
+  /** Keyed upsert of every pending chunk with `INSERT OR REPLACE`. */
   def mergeChunks(table: String, chunkDir: String,
                   schema: StructType): Long =
-    withStmt(landChunks(_, chunkDir)(upsertSql(table, schema)))
+    withStmt(landChunks(_, table, chunkDir, Landing.Replace(schema)))
+
+  /** Land every pending chunk with `landing`, each statement committed on
+    * its own. Returns chunks landed. */
+  def land(table: String, chunkDir: String, landing: Landing): Long = landing match {
+    case Landing.Copy => loadChunks(table, chunkDir)
+    case Landing.Replace(schema) => mergeChunks(table, chunkDir, schema)
+    case _ => withStmt(landChunks(_, table, chunkDir, landing))
+  }
 
   /** Exactly-once append of one `watch` micro-batch: land every chunk in
     * `chunkDir` into `table` inside ONE transaction that also claims
@@ -174,10 +182,7 @@ class DuckDbBackend(val dbPath: String) {
     */
   def appendBatchIdempotent(table: String, batchId: Long,
                             chunkDir: String,
-                            /** Some(schema) → keyed landing with
-                              * [[upsertSql]] (the watch-merge mode); None →
-                              * plain [[copySql]] append. */
-                            mergeSchema: Option[StructType] = None): Boolean =
+                            landing: Landing = Landing.Copy): Boolean =
     withConn { c =>
       c.setAutoCommit(false)
       val s = c.createStatement()
@@ -192,8 +197,7 @@ class DuckDbBackend(val dbPath: String) {
         else {
           s.execute("INSERT INTO _graft_watch_log VALUES " +
             s"('${ident(table)}', $batchId)")
-          landChunks(s, chunkDir)(
-            mergeSchema.fold(copySql(table) _)(upsertSql(table, _)))
+          landChunks(s, table, chunkDir, landing)
           c.commit(); true
         }
       } catch { case e: Throwable => c.rollback(); throw e }
@@ -212,4 +216,19 @@ class DuckDbBackend(val dbPath: String) {
       Iterator.continually(rs).takeWhile(_.next())
         .map(r => (1 to n).map(r.getObject(_)).toList).toList
     }
+}
+
+object DuckDbBackend {
+  /** How chunk rows meet the table's rows: `Copy` appends them all; a
+    * keyed landing reads them as `schema` and, on a key the table holds,
+    * replaces its row (`Replace`) or keeps it (`Ignore`). */
+  sealed trait Landing
+  object Landing {
+    case object Copy extends Landing
+    sealed abstract class Keyed(val onConflict: String) extends Landing {
+      def schema: StructType
+    }
+    final case class Replace(schema: StructType) extends Keyed("REPLACE")
+    final case class Ignore(schema: StructType) extends Keyed("IGNORE")
+  }
 }
