@@ -82,6 +82,11 @@ object LocalSession {
       // (the reference is deliberately flavor-lenient — clickhouse_backend
       // .py:134-138 parseDateTimeBestEffortOrNull; duckdb_backend.py:107).
       .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+      // timestamps are written as INT64 TIMESTAMP(MICROS), not Spark's
+      // default INT96: parquet keeps no min/max statistics for INT96, and
+      // the sync watermark on a last-modified column is read from those
+      // statistics (graft.io.Tables.footerMax) instead of by a Spark job
+      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
       // gzip interchange chunks compress at BEST_SPEED: the reference's
       // gzip role is transport framing, not archival (pgwarehouse.py:259
       // just wants warehouse loaders to accept the chunk), and deflate

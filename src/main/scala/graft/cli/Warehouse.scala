@@ -96,12 +96,12 @@ class Warehouse(spark: SparkSession, cfg: GraftConfig,
     // so the guard runs BEFORE any drop: a reload whose extract produced
     // zero chunks must not destroy existing data
     if (pendingChunks(name).isEmpty)
-      return warehouseTable(name).map(_.count()).getOrElse(0L)
+      return warehouseTable(name).map(Tables.rowCount).getOrElse(0L)
     if (dropTable) Catalog.dropPath(spark, warehousePath(name))
     val df = Tables.readCsvChunks(spark, chunkDir(name), capturedSchema(name))
     writeAtomic(df, warehousePath(name))
     archiveChunks(name)
-    Tables.parquet(spark, warehousePath(name)).count()
+    Tables.rowCount(Tables.parquet(spark, warehousePath(name)))
   }
 
   private def schemaFile(name: String) = s"${cfg.dataDir}/$name.schema.json"
@@ -172,7 +172,8 @@ class Warehouse(spark: SparkSession, cfg: GraftConfig,
     * reload, bootstrap or merge through [[writeAtomic]], an append or
     * insert through [[appendAtomic]]. An unkeyed `watch` batch has no key
     * to anti-join its replay away, so it appends under its `b<batchId>-`
-    * file prefix instead.
+    * file prefix instead. A guarded merge first drops the rows older than
+    * their landed row ([[Merge.notOlder]]).
     */
   private def land(name: String, step: SyncStep, target: Option[DataFrame],
                    batchId: Option[Long]): Unit = {
@@ -184,8 +185,9 @@ class Warehouse(spark: SparkSession, cfg: GraftConfig,
         graft.streaming.StreamingSync.commitBatchFiles(spark, rows, _, path))
       case SyncStep.Insert(rows, pks) =>
         appendAtomic(rows.join(target.get, pks, "left_anti"), path)
-      case SyncStep.Upsert(rows, pks) =>
-        writeAtomic(Merge.deleteInsert(target.get, rows, pks), path)
+      case SyncStep.Upsert(rows, pks, guard) =>
+        val fresh = guard.fold(rows)(Merge.notOlder(rows, target.get, pks, _))
+        writeAtomic(Merge.deleteInsert(target.get, fresh, pks), path)
     }
   }
 
@@ -272,7 +274,7 @@ class Warehouse(spark: SparkSession, cfg: GraftConfig,
     writeAtomic(Tables.parquet(spark, path).repartition(nFiles)
       .observe(obs, org.apache.spark.sql.functions.count(
         org.apache.spark.sql.functions.lit(1)).as("n")), path)
-    val rows = Tables.observedCount(obs, Tables.parquet(spark, path).count())
+    val rows = Tables.observedCount(obs, Tables.rowCount(Tables.parquet(spark, path)))
     (before.length.toLong, dataFiles.length.toLong, rows)
   }
 
@@ -430,10 +432,12 @@ class Warehouse(spark: SparkSession, cfg: GraftConfig,
 
   /** Land one planned step in DuckDB from its rows, extracted once as
     * gzip CSV: a tick's reload or bootstrap through [[loadDuck]], anything
-    * else by `COPY` (append), `INSERT OR IGNORE` (insert) or
-    * `INSERT OR REPLACE` (merge). A zero-row tick delta is a `noop`; a
-    * `watch` batch lands inside the backend's batch-log transaction.
-    * Returns the action taken.
+    * else by `COPY` (append), `INSERT OR IGNORE` (insert),
+    * `INSERT OR REPLACE` (merge) or, for a guarded merge,
+    * `INSERT … ON CONFLICT … DO UPDATE … WHERE` the row is not older than
+    * the landed one. A zero-row tick delta is a `noop`; a `watch` batch
+    * lands inside the backend's batch-log transaction. Returns the action
+    * taken.
     */
   private def landDuck(name: String, step: SyncStep, duck: DuckDbBackend,
                        batchId: Option[Long]): String = {
@@ -458,7 +462,9 @@ class Warehouse(spark: SparkSession, cfg: GraftConfig,
       case SyncStep.Replace(_, rows) => landed(rows, Landing.Copy)
       case SyncStep.Append(rows) => landed(rows, Landing.Copy)
       case SyncStep.Insert(rows, _) => landed(rows, Landing.Ignore(rows.schema))
-      case SyncStep.Upsert(rows, _) => landed(rows, Landing.Replace(rows.schema))
+      case SyncStep.Upsert(rows, _, None) => landed(rows, Landing.Replace(rows.schema))
+      case SyncStep.Upsert(rows, pks, Some(lm)) =>
+        landed(rows, Landing.Newer(rows.schema, pks, lm))
     }
   }
 

@@ -5,14 +5,19 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.catalyst.expressions.RowOrdering
 
+import graft.io.Tables
+
 /** High-watermark reads (reference A2/A3): `SELECT max(pk)` /
   * `SELECT max(last_modified)` against the *sink*, with the null-watermark →
   * full-load degradation (clickhouse_backend.py:210-226).
   *
-  * Scale: a single-column max is a partial-aggregated scan (map-side combine,
-  * one row shuffled per partition) — O(1) result regardless of table size,
-  * but an aggregate job on every read: the v1 parquet source does not answer
-  * `max` from footer statistics, it reads the column.
+  * On a real warehouse that query is cheap; on the parquet warehouse
+  * [[Sink.of]] answers it from the footers of the files the table's scan
+  * reads ([[graft.io.Tables.footerMax]]): a signed integer, date or µs/ms
+  * timestamp column with min/max statistics in every row group costs one
+  * footer read per file and no Spark job. [[maxOf]] is the aggregate job
+  * every other column or plan falls back to — a partial-aggregated scan,
+  * O(1) result, but it reads the column.
   */
 object Watermark {
   /** Max of an orderable column; None on empty input (→ caller degrades to
@@ -91,6 +96,20 @@ object Merge {
     */
   def deleteInsert(target: DataFrame, changes: DataFrame, pkCols: Seq[String]): DataFrame =
     target.join(changes, pkCols, "left_anti").unionByName(changes)
+
+  /** The `changes` rows not older by `lastModified` than `target`'s row of
+    * the same key. A key `target` lacks passes; a NULL on either side of
+    * the comparison drops the row, as DuckDB's `ON CONFLICT … DO UPDATE …
+    * WHERE` keeps the landed row.
+    */
+  def notOlder(changes: DataFrame, target: DataFrame, pkCols: Seq[String],
+               lastModified: String): DataFrame = {
+    val landed = target.select(pkCols.map(target(_)) :+
+      target(lastModified).as("__landed_lm") :+ lit(true).as("__landed"): _*)
+    changes.join(landed, pkCols, "left")
+      .where(col("__landed").isNull || col(lastModified) >= col("__landed_lm"))
+      .drop("__landed_lm", "__landed")
+  }
 }
 
 /** Per-table sync strategy (reference `get_table_opts`, pgwarehouse.py:72-80;
@@ -127,9 +146,12 @@ trait Sink {
 }
 
 object Sink {
-  /** A warehouse table Spark can read. */
+  /** A warehouse table Spark can read: `max` comes from its parquet
+    * footers where they answer ([[Tables.footerMax]]), else from the
+    * [[Watermark.maxOf]] job. */
   def of(table: DataFrame): Sink = new Sink {
-    def max(col: String): Option[Any] = Watermark.maxOf(table, col)
+    def max(col: String): Option[Any] =
+      Tables.footerMax(table, col).getOrElse(Watermark.maxOf(table, col))
     def keys(pks: Seq[String]): DataFrame =
       table.select(pks.map(table(_)): _*).distinct()
   }
@@ -153,8 +175,12 @@ object SyncStep {
   final case class Insert(rows: DataFrame, pks: Seq[String])
     extends SyncStep("append")
   /** Replace-or-insert the rows on `pks`: the `>=` delta, already reduced
-    * to the last writer per key. */
-  final case class Upsert(rows: DataFrame, pks: Seq[String])
+    * to the last writer per key. A `watch` batch names its last-modified
+    * column in `guard`: a row older than the landed row of its key is not
+    * landed, since a late file can carry an old version. A tick needs no
+    * guard: its `>=` watermark keeps every row at or past every landed
+    * one. */
+  final case class Upsert(rows: DataFrame, pks: Seq[String], guard: Option[String])
     extends SyncStep("merge")
 }
 
@@ -208,9 +234,9 @@ class SyncEngine {
         def lastWriters(df: DataFrame) = Merge.dedupChanges(df, pks, Seq(df(lm)))
         sink match {
           case None => SyncStep.Replace("bootstrap", lastWriters(rows))
-          case Some(_) if batch => SyncStep.Upsert(lastWriters(rows), pks)
+          case Some(_) if batch => SyncStep.Upsert(lastWriters(rows), pks, Some(lm))
           case Some(tgt) => SyncStep.Upsert(
-            lastWriters(Watermark.modifiedSince(rows, lm, tgt.max(lm))), pks)
+            lastWriters(Watermark.modifiedSince(rows, lm, tgt.max(lm))), pks, None)
         }
     }
 
@@ -233,7 +259,7 @@ class SyncEngine {
       case SyncStep.Replace(_, rows) => rows
       case SyncStep.Append(rows) => sink.get.unionByName(rows)
       case SyncStep.Insert(rows, pks) => sink.get.unionByName(rows.join(sink.get, pks, "left_anti"))
-      case SyncStep.Upsert(rows, pks) => Merge.deleteInsert(sink.get, rows, pks)
+      case SyncStep.Upsert(rows, pks, _) => Merge.deleteInsert(sink.get, rows, pks)
     }
     SyncResult(table, step.action)
   }

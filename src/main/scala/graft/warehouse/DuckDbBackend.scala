@@ -121,22 +121,36 @@ class DuckDbBackend(val dbPath: String) {
     *
     * `INSERT OR REPLACE|IGNORE INTO t SELECT * FROM read_csv(...)`
     * (duckdb_backend.py:190-197) — DuckDB resolves conflicts on the
-    * table's PRIMARY KEY. Unlike the reference's `read_csv_auto`, the read
-    * is schema-PINNED via a `columns={...}` spec built from the captured
-    * schema (the engine-wide rule: interchange reads never re-infer). One
-    * statement may not meet a key twice, so callers land one row per key.
+    * table's PRIMARY KEY. `Newer` spells the replace as `INSERT … ON
+    * CONFLICT (pks) DO UPDATE SET … WHERE excluded.lm >= t.lm`, so a row
+    * older than the landed one leaves it in place. Unlike the reference's
+    * `read_csv_auto`, the read is schema-PINNED via a `columns={...}` spec
+    * built from the captured schema (the engine-wide rule: interchange
+    * reads never re-infer). One statement may not meet a key twice, so
+    * callers land one row per key.
     */
   private def landingSql(table: String, landing: Landing)
                         (chunk: java.io.File): String = landing match {
     case Landing.Copy =>
       s"COPY ${ident(table)} FROM '${chunk.getAbsolutePath}' (HEADER)"
     case keyed: Landing.Keyed =>
+      def q(c: String) = WarehouseDdl.DuckDb.quoteName(c)
       val spec = keyed.schema.fields.map(f =>
-        s"'${WarehouseDdl.DuckDb.quoteName(f.name)}': " +
+        s"'${q(f.name)}': " +
           s"'${WarehouseDdl.DuckDb.colType(WarehouseDdl.pgName(f.dataType))}'")
         .mkString("{", ", ", "}")
-      s"INSERT OR ${keyed.onConflict} INTO ${ident(table)} SELECT * FROM " +
-        s"read_csv('${chunk.getAbsolutePath}', header=true, columns=$spec)"
+      val rows = s"SELECT * FROM read_csv('${chunk.getAbsolutePath}', " +
+        s"header=true, columns=$spec)"
+      keyed match {
+        case Landing.Replace(_) => s"INSERT OR REPLACE INTO ${ident(table)} $rows"
+        case Landing.Ignore(_) => s"INSERT OR IGNORE INTO ${ident(table)} $rows"
+        case Landing.Newer(schema, pks, lm) =>
+          val set = schema.fieldNames.filterNot(pks.contains)
+            .map(c => s"${q(c)} = excluded.${q(c)}").mkString(", ")
+          s"INSERT INTO ${ident(table)} $rows ON CONFLICT " +
+            s"(${pks.map(q).mkString(", ")}) DO UPDATE SET $set " +
+            s"WHERE excluded.${q(lm)} >= ${ident(table)}.${q(lm)}"
+      }
   }
 
   /** Run one landing statement per chunk in `chunkDir`, in name order.
@@ -221,14 +235,17 @@ class DuckDbBackend(val dbPath: String) {
 object DuckDbBackend {
   /** How chunk rows meet the table's rows: `Copy` appends them all; a
     * keyed landing reads them as `schema` and, on a key the table holds,
-    * replaces its row (`Replace`) or keeps it (`Ignore`). */
+    * replaces its row (`Replace`), keeps it (`Ignore`), or replaces it
+    * unless the landed row is newer by `lastModified` (`Newer`). */
   sealed trait Landing
   object Landing {
     case object Copy extends Landing
-    sealed abstract class Keyed(val onConflict: String) extends Landing {
+    sealed trait Keyed extends Landing {
       def schema: StructType
     }
-    final case class Replace(schema: StructType) extends Keyed("REPLACE")
-    final case class Ignore(schema: StructType) extends Keyed("IGNORE")
+    final case class Replace(schema: StructType) extends Keyed
+    final case class Ignore(schema: StructType) extends Keyed
+    final case class Newer(schema: StructType, pks: Seq[String],
+                           lastModified: String) extends Keyed
   }
 }

@@ -1,7 +1,5 @@
 package graft
 
-import java.util.concurrent.ConcurrentLinkedQueue
-
 import scala.collection.immutable.ListMap
 import scala.jdk.CollectionConverters._
 
@@ -9,7 +7,6 @@ import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.LogicalTypeAnnotation
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{AnalysisException, SaveMode}
 import org.apache.spark.sql.functions.{col, unix_micros}
 import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
@@ -27,6 +24,7 @@ import graft.warehouse.DuckDbBackend
 class FooterSchemaSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
+  import TestSpark.{jobPhases, writeNs}
 
   private val sf = "/root/testdata/sf0.01"
 
@@ -60,22 +58,6 @@ class FooterSchemaSpec extends AnyFunSuite {
         f.copy(dataType = TimestampType)
       else f
     })
-  }
-
-  /** One parquet file of (id, ts) rows, ts a TIMESTAMP(NANOS) column,
-    * written with parquet's example writer: Spark itself never writes ns. */
-  private def writeNs(file: String, rows: Seq[(Long, Long)]): Unit = {
-    import org.apache.parquet.example.data.simple.SimpleGroupFactory
-    import org.apache.parquet.hadoop.example.ExampleParquetWriter
-    import org.apache.parquet.schema.MessageTypeParser
-    val schema = MessageTypeParser.parseMessageType(
-      "message m { required int64 id; required int64 ts (TIMESTAMP(NANOS,true)); }")
-    val writer = ExampleParquetWriter.builder(new Path(file))
-      .withType(schema).withConf(spark.sparkContext.hadoopConfiguration).build()
-    val groups = new SimpleGroupFactory(schema)
-    try rows.foreach { case (id, ns) =>
-      writer.write(groups.newGroup().append("id", id).append("ts", ns))
-    } finally writer.close()
   }
 
   /** A warehouse table built by a bootstrap and three append syncs. */
@@ -144,35 +126,6 @@ class FooterSchemaSpec extends AnyFunSuite {
     val schema = Tables.parquet(spark, dir).schema
     assert(schema == spark.read.parquet(dir).schema)
     assert(schema.fieldNames.toSeq == Seq("id", "v", "k"))
-  }
-
-  /** The phases in which Spark jobs started, each body run under its own
-    * tag; a trailing sentinel job proves the listener saw them all. */
-  private def jobPhases(phases: (String, () => Any)*): Seq[String] = {
-    val sc = spark.sparkContext
-    val key = "graft.test.jobprobe"
-    val tag = java.util.UUID.randomUUID().toString
-    val seen = new ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty(key)))
-          .filter(_.startsWith(tag)).foreach(seen.add)
-    }
-    sc.addSparkListener(listener)
-    try {
-      (phases :+ ("sentinel" -> (() => sc.parallelize(1 to 2).count())))
-        .foreach { case (phase, body) =>
-          sc.setLocalProperty(key, s"$tag:$phase")
-          body()
-        }
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!seen.contains(s"$tag:sentinel") && System.nanoTime() < deadline)
-        Thread.sleep(20)
-    } finally {
-      sc.setLocalProperty(key, null)
-      sc.removeSparkListener(listener)
-    }
-    seen.asScala.toSeq.map(_.stripPrefix(s"$tag:"))
   }
 
   test("building Tables.table and Catalog.describe starts no Spark job") {

@@ -160,6 +160,26 @@ class WatchLandingSpec extends AnyFunSuite {
     }
   }
 
+  test("a late file carrying an older version of a landed key leaves the " +
+    "newer row on both warehouses; its other rows still land") {
+    val f = new Fixture("late")
+    Seq(
+      Seq((1L, "new", "2024-02-01 00:00:00"), (2L, "two", "2024-01-01 00:00:00")),
+      Seq((1L, "old", "2024-01-01 00:00:00"), (2L, "two-b", "2024-01-01 00:00:00"),
+        (3L, "three", "2024-01-01 00:00:00"))
+    ).zipWithIndex.foreach { case (file, i) =>
+      f.landPart("ups", s"f$i", rows(file))
+      assert(f.w.watch("ups") == file.size, s"file $i via watch")
+      if (driverPresent)
+        assert(f.w.watchDuck("ups", f.duck) == file.size, s"file $i via watchDuck")
+    }
+    // key 2 ties on its last-modified value: the later file's row lands
+    val want = Seq(row(1L, "new", "2024-02-01 00:00:00"),
+      row(2L, "two-b", "2024-01-01 00:00:00"), row(3L, "three", "2024-01-01 00:00:00"))
+    assert(f.parquetRows("ups") == want)
+    if (driverPresent) assert(f.duckRows("ups") == want)
+  }
+
   test("a batch Spark replays (its commit deleted from the checkpoint) " +
     "leaves both warehouses unchanged") {
     val f = drained
