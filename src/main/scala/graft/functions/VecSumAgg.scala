@@ -22,8 +22,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * `sameResult` — CacheManager cached each k-means invocation's rounds as
   * SEPARATE corpus-sized entries (a per-invocation cache leak in a
   * resident session) and CacheRegistry's same-plan dedupe could not
-  * refresh, re-registering duplicates (the CacheProbe dump showed entries
-  * growing per rep: `vecsum sameResult: false`). A plain case-class
+  * refresh, re-registering duplicates (the session's cache entries grew
+  * by one per identical k-means run). A plain case-class
   * aggregate canonicalizes like any built-in, so re-built plans dedupe
   * again. It also skips the udaf's per-group Seq[Long] encoder round-trip.
   */

@@ -12,13 +12,16 @@ import org.apache.spark.sql.expressions.Window
   * partial aggregation and any oracle. Cosine is then derived by IEEE
   * `/`+`sqrt` on those exact integers, which is also bit-deterministic.
   *
-  * Scale path (100 TB): brute-force top-k is a cross join — O(Q·N). For large
-  * N, `ivfTopK` restricts each probe to a coarse partition (here the `label`
-  * column as the inverted-file cell; in a real pipeline, k-means cell ids
-  * computed upstream), cutting the join to O(Q·N/cells) and turning it into an
-  * equi-join that hash-partitions by cell — no broadcast of the full corpus.
-  * The query side is small and broadcast. All expressions stay inside
-  * whole-stage codegen (`zip_with`/`aggregate` over primitive arrays; no UDFs).
+  * One search, [[topK]]: a [[Probe]] picks which corpus vectors each query
+  * scores and a [[Score]] picks how a pair is scored and ranked. Scale path
+  * (100 TB): `All` is a cross join — O(Q·N), the small query side
+  * broadcast. `Own` and `Nearest` restrict each query to coarse cells (a
+  * sign-LSH bucket, a trained k-means cell, any label column), cutting the
+  * join to O(Q·N·probed/cells) and turning it into an equi-join that
+  * hash-partitions by cell — no broadcast of the full corpus. `Pq` bounds
+  * the cost of each score instead: two lookups in per-query distance
+  * tables. All expressions stay inside whole-stage codegen (native
+  * expressions and `transform` over primitive arrays; no UDFs).
   */
 object Similarity {
 
@@ -40,42 +43,103 @@ object Similarity {
   def cosineFromQ(dot: Column, n2a: Column, n2b: Column): Column =
     dot.cast("double") / (sqrt(n2a.cast("double")) * sqrt(n2b.cast("double")))
 
-  /** Brute-force top-k neighbors for a set of query vectors.
-    * Output: (qid, nid, dot_q, cosine, rank), rank 1..k per query,
-    * deterministic tiebreak on neighbor id.
+  /** Which corpus vectors a query scores. */
+  sealed trait Probe
+  /** Every corpus vector: exact search. */
+  case object All extends Probe
+  /** The vectors in the query's own cell of `cellCol` — recall < 1 when the
+    * true neighbor sits just across a cell boundary. */
+  final case class Own(cellCol: String) extends Probe
+  /** The vectors in the `n` cells of `cellCol` whose floor-mean centroids
+    * are [[nearest]] the query. Cells partition the corpus, so a neighbor
+    * is reachable via exactly one probed cell — no dedup needed. */
+  final case class Nearest(cellCol: String, n: Int) extends Probe
+
+  /** How a probed (query, neighbor) pair is scored and ranked. */
+  sealed trait Score
+  /** Exact integer dot product `dot_q` (and its `cosine`), ranked by
+    * `dot_q` descending. */
+  case object Dot extends Score
+  /** Product-quantization asymmetric distance `adist` (see [[pqEncode]])
+    * over two `subDims`-wide subspaces, ranked by `adist` ascending. */
+  final case class Pq(subDims: Int) extends Score
+
+  /** Top-k neighbors of each query among `corpus`; a vector is never its
+    * own neighbor. Output: (qid, nid, dot_q, cosine, rank) for `Dot`,
+    * (qid, nid, adist, rank) for `Pq`; rank 1..k per query, ties broken by
+    * neighbor id.
+    *
+    * Plan shapes: `All` with `Dot` broadcasts the query side into a cross
+    * join; `All` with `Pq` pairs queries and corpus through the two
+    * broadcast distance-table joins (no cross join); `Own` and `Nearest`
+    * equi-join on the cell, and `Nearest` picks its probes from the
+    * corpus's cell centroids, a handful of rows broadcast against the
+    * queries.
     */
-  def bruteForceTopK(queries: DataFrame, corpus: DataFrame, idCol: String,
-                     vecCol: String, k: Int): DataFrame = {
-    val q = queries.select(col(idCol).as("qid"), quantize(col(vecCol)).as("qv"))
-    val c = corpus.select(col(idCol).as("nid"), quantize(col(vecCol)).as("nv"))
-    val scored = broadcast(q).crossJoin(c)
-      .where(col("qid") =!= col("nid"))
-      .select(col("qid"), col("nid"),
-        dotQ(col("qv"), col("nv")).as("dot_q"),
-        cosineFromQ(dotQ(col("qv"), col("nv")),
-          norm2Q(col("qv")), norm2Q(col("nv"))).as("cosine"))
-    val w = Window.partitionBy(col("qid")).orderBy(desc("dot_q"), asc("nid"))
-    scored.withColumn("rank", row_number().over(w).cast("long"))
-      .where(col("rank") <= k)
+  def topK(queries: DataFrame, corpus: DataFrame, idCol: String,
+           vecCol: String, k: Int, probe: Probe, score: Score): DataFrame = {
+    def vecs(df: DataFrame, id: String, v: String, cell: Column*) =
+      df.select(Seq(col(idCol).as(id), quantize(col(vecCol)).as(v)) ++ cell: _*)
+    val q = vecs(queries, "qid", "qv")
+    // the probed (qid, .., nid, ..) pairs; None = every pair
+    val pairs = probe match {
+      case All => None
+      case Own(cell) =>
+        Some(vecs(queries, "qid", "qv", col(cell).as("qcell"))
+          .join(vecs(corpus, "nid", "nv", col(cell).as("ncell")),
+            col("qcell") === col("ncell")))
+      case Nearest(cell, n) =>
+        val c = vecs(corpus, "nid", "nv", col(cell).as("ncell"))
+        Some(nearest(q, "qid", "qv", centroidsOf(c, "ncell", "nv"), n)
+          .join(c, col("ccell") === col("ncell")))
+    }
+    val (scored, metric) = score match {
+      case Dot =>
+        val dot = dotQ(col("qv"), col("nv"))
+        (pairs.getOrElse(broadcast(q).crossJoin(vecs(corpus, "nid", "nv")))
+          .select(col("qid"), col("nid"), dot.as("dot_q"),
+            cosineFromQ(dot, norm2Q(col("qv")), norm2Q(col("nv"))).as("cosine")),
+          desc("dot_q"))
+      case Pq(subDims) =>
+        val (codes, dtabs) = pqEncode(queries, corpus, idCol, vecCol, subDims)
+        // over All, the first table lookup is what pairs each query with
+        // the whole corpus
+        val (cands, on) = pairs.fold((codes, Seq("code0")))(p =>
+          (p.select("qid", "nid").join(codes, "nid"), Seq("code0", "qid")))
+        (cands.join(broadcast(dtabs(0)), on)
+          .join(broadcast(dtabs(1)), Seq("code1", "qid"))
+          .select(col("qid"), col("nid"), (col("pd0") + col("pd1")).as("adist")),
+          asc("adist"))
+    }
+    rank(scored.where(col("qid") =!= col("nid")), metric, k)
   }
 
-  /** IVF-style top-k: probe only the query's coarse cell (equi-join on the
-    * cell id instead of a cross join). Recall < 1 by construction; this is
-    * the scale path — the cell column shards the corpus so the join
-    * hash-partitions instead of broadcasting N vectors.
+  /** The rank step of every top-k: row_number per query by `metric`, ties
+    * broken by neighbor id, kept to rank ≤ k (the filter sits on the
+    * window, so Spark plans a partial WindowGroupLimit below the shuffle).
     */
-  def ivfTopK(queries: DataFrame, corpus: DataFrame, idCol: String,
-              vecCol: String, cellCol: String, k: Int): DataFrame = {
-    val q = queries.select(col(idCol).as("qid"), col(cellCol).as("cell"),
-      quantize(col(vecCol)).as("qv"))
-    val c = corpus.select(col(idCol).as("nid"), col(cellCol).as("ncell"),
-      quantize(col(vecCol)).as("nv"))
-    val scored = q.join(c, col("cell") === col("ncell") && col("qid") =!= col("nid"))
-      .select(col("qid"), col("nid"), dotQ(col("qv"), col("nv")).as("dot_q"))
-    val w = Window.partitionBy(col("qid")).orderBy(desc("dot_q"), asc("nid"))
-    scored.withColumn("rank", row_number().over(w).cast("long"))
+  private def rank(scored: DataFrame, metric: Column, k: Int): DataFrame =
+    scored.withColumn("rank", row_number().over(
+        Window.partitionBy(col("qid")).orderBy(metric, asc("nid"))).cast("long"))
       .where(col("rank") <= k)
-  }
+
+  /** The `n` centroids nearest each row of `rows` (keyed by `id`, quantized
+    * vector `vec`) by exact integer squared distance `dist_q`, ties broken
+    * by cell id: rows' columns plus (ccell, dist_q), n rows per id. The
+    * centroids `cents` (ccell, cvq) are a handful of rows, broadcast
+    * against every row — a deliberate broadcast product, never a cross
+    * join with the corpus. k-means assignment, PQ encoding and
+    * multi-probe selection all run this one window.
+    */
+  private def nearest(rows: DataFrame, id: String, vec: String,
+                      cents: DataFrame, n: Int): DataFrame =
+    rows.crossJoin(broadcast(cents))
+      .select(rows.columns.map(col).toSeq :+ col("ccell") :+
+        distQ(col(vec), col("cvq")).as("dist_q"): _*)
+      .withColumn("__rn", row_number().over(
+        Window.partitionBy(col(id)).orderBy(asc("dist_q"), asc("ccell"))))
+      .where(col("__rn") <= n)
+      .drop("__rn")
 
   /** Hyperplane-sign projection p of `totalPlanes`: the sum of vector
     * elements at positions ≡ p (mod totalPlanes). A deterministic
@@ -91,14 +155,14 @@ object Similarity {
   /** One deterministic Lloyd (k-means) step for IVF cell training: cells
     * are seeded by sign-LSH buckets, centroids are the elementwise
     * floor-mean of each seed cell's quantized vectors, and every vector is
-    * reassigned to its nearest centroid by exact integer squared distance
-    * (ties broken by cell id). All arithmetic is integers or exact doubles
-    * (sums < 2^53), so Spark and an oracle engine agree bit-for-bit.
+    * reassigned to its [[nearest]] centroid. All arithmetic is integers or
+    * exact doubles (sums < 2^53), so Spark and an oracle engine agree
+    * bit-for-bit.
     *
     * Scale shape: centroids are k small rows — broadcast them and score
     * every vector in a single narrow pass (the canonical assign step); the
-    * centroid computation itself is one shuffle of (cell, pos) partial
-    * sums. Returns (id, seed_cell, new_cell, dist_q).
+    * centroid computation itself is one shuffle of per-cell partial sums.
+    * Returns (id, seed_cell, new_cell, dist_q).
     */
   def kmeansAssignStep(df: DataFrame, idCol: String, vecCol: String,
                        seedBits: Int = 4, totalPlanes: Int = 16): DataFrame = {
@@ -111,15 +175,9 @@ object Similarity {
       .withColumn("seed_cell",
         signLshBucket(col("vq"), 0 until seedBits, totalPlanes))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val centroids = centroidsOf(v, "seed_cell", "vq")
-    val dist =
-      graft.functions.NativeExpressions.squaredDistLong(col("vq"), col("cvq"))
-    val w = Window.partitionBy(col("id")).orderBy(asc("dist_q"), asc("ccell"))
-    v.crossJoin(broadcast(centroids))
-      .select(col("id"), col("seed_cell"), col("ccell"), dist.as("dist_q"))
-      .withColumn("__rn", row_number().over(w)).where(col("__rn") === 1)
-      .drop("__rn")
-      .withColumnRenamed("ccell", "new_cell")
+    nearest(v, "id", "vq", centroidsOf(v, "seed_cell", "vq"), 1)
+      .select(col("id"), col("seed_cell"), col("ccell").as("new_cell"),
+        col("dist_q"))
   }
 
   /** Elementwise floor-mean centroid per cell of quantized vectors —
@@ -155,44 +213,10 @@ object Similarity {
   private def distQ(vq: Column, cvq: Column): Column =
     graft.functions.NativeExpressions.squaredDistLong(vq, cvq)
 
-  /** Multi-probe IVF top-k: instead of probing only the query's own cell
-    * (`ivfTopK` — recall loss when the true neighbor sits just across a
-    * cell boundary), each query probes its `nprobe` nearest cells by exact
-    * integer distance to the cell centroids. Centroids are k tiny rows —
-    * broadcast for probe selection (a deliberate broadcast product, same
-    * shape as `kmeansAssignStep`); the probe→corpus join is then a plain
-    * equi-join on the cell id, hash-partitioned, shuffling O(Q·nprobe)
-    * probe rows against the corpus — never a cross join with the corpus.
-    * Cells partition the corpus, so a neighbor is reachable via exactly
-    * one probed cell — no dedup needed. Returns (qid, nid, dot_q, rank).
-    */
-  def ivfMultiProbeTopK(queries: DataFrame, corpus: DataFrame, idCol: String,
-                        vecCol: String, cellCol: String, k: Int,
-                        nprobe: Int): DataFrame = {
-    val q = queries.select(col(idCol).as("qid"), quantize(col(vecCol)).as("qv"))
-    val c = corpus.select(col(idCol).as("nid"), col(cellCol).as("ncell"),
-      quantize(col(vecCol)).as("nv"))
-    val cents = centroidsOf(c, "ncell", "nv")
-    val probeW = Window.partitionBy(col("qid"))
-      .orderBy(asc("cdist"), asc("ccell"))
-    val probes = q.crossJoin(broadcast(cents))
-      .select(col("qid"), col("qv"), col("ccell"),
-        distQ(col("qv"), col("cvq")).as("cdist"))
-      .withColumn("__rn", row_number().over(probeW))
-      .where(col("__rn") <= nprobe)
-      .select(col("qid"), col("qv"), col("ccell"))
-    val scored = probes
-      .join(c, col("ccell") === col("ncell") && col("qid") =!= col("nid"))
-      .select(col("qid"), col("nid"), dotQ(col("qv"), col("nv")).as("dot_q"))
-    val w = Window.partitionBy(col("qid")).orderBy(desc("dot_q"), asc("nid"))
-    scored.withColumn("rank", row_number().over(w).cast("long"))
-      .where(col("rank") <= k)
-  }
-
   /** Lloyd's k-means iterated to a fixed budget: seed cells from sign-LSH
     * (iteration 0 = `kmeansAssignStep`'s seeding), then `iters` rounds of
-    * floor-mean centroids + nearest-centroid reassignment, all in the same
-    * deterministic integer arithmetic. Each round is one (cell,pos)
+    * floor-mean centroids + [[nearest]]-centroid reassignment, all in the
+    * same deterministic integer arithmetic. Each round is one per-cell
     * partial-sum shuffle plus one broadcast scoring pass; assignments are
     * persisted per round (each round's plan reads the previous assignment
     * twice — centroid build and reassign — and Spark has no ReusedExchange
@@ -222,12 +246,8 @@ object Similarity {
     var prevRound: DataFrame = assigned
     for (_ <- 1 to iters) {
       val cents = centroidsOf(assigned, "cell", "vq")
-      val w = Window.partitionBy(col("id")).orderBy(asc("dist_q"), asc("ccell"))
       assigned = CacheRegistry.register(
-        assigned.select(col("id"), col("vq")).crossJoin(broadcast(cents))
-          .select(col("id"), col("vq"), col("ccell"),
-            distQ(col("vq"), col("cvq")).as("dist_q"))
-          .withColumn("__rn", row_number().over(w)).where(col("__rn") === 1)
+        nearest(assigned.select(col("id"), col("vq")), "id", "vq", cents, 1)
           .select(col("id"), col("vq"), col("ccell").as("cell"), col("dist_q"))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
       // materialize the cache without an aggregation pass (VERDICT r6
@@ -240,48 +260,23 @@ object Similarity {
     assigned.select(col("id"), col("cell"), col("dist_q"))
   }
 
-  /** Product-quantization ADC top-k — the memory story of ANN at corpus
-    * scale. Each vector's two 32-dim subvectors are encoded as the id of
-    * their nearest codebook entry (codebooks: one floor-mean Lloyd
-    * assignment over 2-bit sign-LSH seed cells per subspace, ≤4 entries
-    * each), so the 100 TB float corpus an exhaustive scan would re-read per
-    * query collapses to two small ints per vector plus two 4-row
-    * codebooks. Queries never touch corpus vectors again: each query
-    * precomputes a per-subspace distance TABLE to the codebook (4 rows),
-    * and the asymmetric-distance score of any corpus vector is the sum of
-    * two table lookups — here two broadcast equi-joins on the code ids, no
-    * arithmetic over the original floats in the scoring pass at all.
+  /** The product-quantization encode step behind `Pq` — the memory story
+    * of ANN at corpus scale. Each vector's two `subDims`-wide subvectors
+    * are encoded as the id of their [[nearest]] codebook entry (codebooks:
+    * one floor-mean Lloyd assignment over 2-bit sign-LSH seed cells per
+    * subspace, ≤4 entries each), so the 100 TB float corpus an exhaustive
+    * scan would re-read per query collapses to two small ints per vector
+    * plus two 4-row codebooks. Queries never touch corpus vectors again:
+    * each query precomputes a per-subspace distance TABLE to the codebook
+    * (4 rows), and the asymmetric-distance score of any corpus vector is
+    * the sum of two table lookups — no arithmetic over the original floats
+    * in the scoring pass at all. All arithmetic is the quantized-integer
+    * kind used by the rest of the family, so an oracle matches
+    * bit-for-bit. Combined with `Nearest`, coarse cells bound WHICH vectors
+    * are scored and PQ bounds the COST of scoring each.
     *
-    * All arithmetic is the quantized-integer kind used by the rest of the
-    * family (micro-unit longs, floor-mean centroids, exact squared
-    * distances < 2^53), so an oracle matches bit-for-bit. Ranking is by
-    * ascending approximate squared L2 (ADC's native metric), ties broken
-    * by neighbor id. In production this composes with the IVF path —
-    * coarse cells bound WHICH vectors are scored, PQ bounds the COST of
-    * scoring each — and the codes/codebooks persist as table columns;
-    * here the scoring join deliberately spans the whole demo corpus so
-    * the ADC structure itself is what the oracle checks.
-    *
-    * Returns (qid, nid, adist, rank), rank 1..k per query.
-    */
-  def pqTopK(queries: DataFrame, corpus: DataFrame, idCol: String,
-             vecCol: String, k: Int, subDims: Int = 32): DataFrame = {
-    val (codes, dtabs) = pqEncode(queries, corpus, idCol, vecCol, subDims)
-    val scored = codes
-      .join(broadcast(dtabs(0)), Seq("code0"))
-      .join(broadcast(dtabs(1)), Seq("code1", "qid"))
-      .where(col("qid") =!= col("nid"))
-      .select(col("qid"), col("nid"), (col("pd0") + col("pd1")).as("adist"))
-    val w = Window.partitionBy(col("qid")).orderBy(asc("adist"), asc("nid"))
-    scored.withColumn("rank", row_number().over(w).cast("long"))
-      .where(col("rank") <= k)
-  }
-
-  /** Shared PQ encode step: per-subspace codebooks from the corpus, corpus
-    * codes (nid, code0, code1), and per-query distance tables
-    * (qid, codeS, pdS) — the pieces both the whole-corpus ADC scan
-    * ([[pqTopK]]) and the probe-restricted IVF+PQ path ([[ivfPqTopK]])
-    * assemble.
+    * Returns the corpus codes (nid, code0, code1) and the per-query
+    * distance tables (qid, codeS, pdS).
     */
   private def pqEncode(queries: DataFrame, corpus: DataFrame, idCol: String,
                        vecCol: String, subDims: Int)
@@ -295,10 +290,7 @@ object Similarity {
       val cents = centroidsOf(
         sub.withColumn("cell", signLshBucket(col("sv"), 0 until 2, 2)),
         "cell", "sv")
-      val w = Window.partitionBy(col("nid")).orderBy(asc("pd"), asc("ccell"))
-      val codes = sub.crossJoin(broadcast(cents))
-        .select(col("nid"), col("ccell"), distQ(col("sv"), col("cvq")).as("pd"))
-        .withColumn("__rn", row_number().over(w)).where(col("__rn") === 1)
+      val codes = nearest(sub, "nid", "sv", cents, 1)
         .select(col("nid"), col("ccell").as(s"code$s"))
       val dtab = subvec(queries, "qid", s).crossJoin(broadcast(cents))
         .select(col("qid"), col("ccell").as(s"code$s"),
@@ -306,44 +298,6 @@ object Similarity {
       (codes, dtab)
     }
     (parts(0)._1.join(parts(1)._1, "nid"), parts.map(_._2))
-  }
-
-  /** IVF+PQ — the production ANN shape: the coarse quantizer's multi-probe
-    * bounds WHICH corpus vectors each query scores (O(Q·nprobe/cells·N)
-    * candidate rows instead of O(Q·N)), and PQ's asymmetric-distance codes
-    * bound the COST of scoring each one (two table lookups, no corpus
-    * floats). Probe selection is [[ivfMultiProbeTopK]]'s math verbatim;
-    * scoring is [[pqTopK]]'s. At 100 TB both the cell id and the PQ codes
-    * persist as table columns and the per-query work is: broadcast two
-    * 4-row distance tables, equi-join the probed cells, window the
-    * candidates. Returns (qid, nid, adist, rank).
-    */
-  def ivfPqTopK(queries: DataFrame, corpus: DataFrame, idCol: String,
-                vecCol: String, cellCol: String, k: Int, nprobe: Int,
-                subDims: Int = 32): DataFrame = {
-    val q = queries.select(col(idCol).as("qid"), quantize(col(vecCol)).as("qv"))
-    val c = corpus.select(col(idCol).as("nid"), col(cellCol).as("ncell"),
-      quantize(col(vecCol)).as("nv"))
-    val cents = centroidsOf(c, "ncell", "nv")
-    val probeW = Window.partitionBy(col("qid"))
-      .orderBy(asc("cdist"), asc("ccell"))
-    val probes = q.crossJoin(broadcast(cents))
-      .select(col("qid"), col("ccell"),
-        distQ(col("qv"), col("cvq")).as("cdist"))
-      .withColumn("__rn", row_number().over(probeW))
-      .where(col("__rn") <= nprobe)
-      .select(col("qid"), col("ccell"))
-    val (codes, dtabs) = pqEncode(queries, corpus, idCol, vecCol, subDims)
-    val candidates = probes
-      .join(codes.join(c.select(col("nid"), col("ncell")), "nid"),
-        col("ccell") === col("ncell") && col("qid") =!= col("nid"))
-    val scored = candidates
-      .join(broadcast(dtabs(0)), Seq("code0", "qid"))
-      .join(broadcast(dtabs(1)), Seq("code1", "qid"))
-      .select(col("qid"), col("nid"), (col("pd0") + col("pd1")).as("adist"))
-    val w = Window.partitionBy(col("qid")).orderBy(asc("adist"), asc("nid"))
-    scored.withColumn("rank", row_number().over(w).cast("long"))
-      .where(col("rank") <= k)
   }
 
   /** Random-hyperplane LSH bucket id over a chosen subset of planes: bit j of

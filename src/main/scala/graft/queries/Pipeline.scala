@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.io.Tables
 import graft.operators.{AsOf, Contamination, Dedup, Embeddings, Multimodal, RangeJoin, Similarity, TextAnalysis}
+import graft.operators.Similarity.{All, Dot, Nearest, Own, Pq}
 import graft.queries.Relational.Q
 
 /** LLM-training-data pipeline operators as named queries over `documents` /
@@ -592,7 +593,7 @@ object Pipeline {
     s"(CASE WHEN s$j >= 0 THEN ${1L << j} ELSE 0 END)").mkString(" + ")
 
   /** One product-quantization subspace's oracle CTEs (mirrors
-    * Similarity.pqTopK): slice the quantized vector to the subspace, seed
+    * Similarity's `Pq` scorer): slice the quantized vector to the subspace, seed
     * 2-bit sign-LSH cells (totalPlanes = 2: plane p sums positions ≡ p mod
     * 2), build the floor-mean codebook, assign each vector its nearest
     * entry (the code), and precompute each query's distance table to the
@@ -620,36 +621,26 @@ object Pipeline {
        |  FROM pq_s$s x, pq_cent$s cent WHERE x.vec_id < 10)""".stripMargin
   }
 
-  /** Query-sample bound shared by the default ANN path and its recall
-    * monitor: `graft.ann.recallQueries` (default 10) — the knob a
-    * production deployment turns to scale the brute-force truth side's
-    * cost (the expensive half of recall monitoring grows linearly with
-    * it). The DuckDB oracles pin the DEFAULT; a non-default value is a
-    * deployment knob, not an oracle-checked shape. Truth and approx sides
+  /** Query sample (vec_id < 10, the sample the DuckDB oracles pin) shared
+    * by the default ANN path and its recall monitor: truth and approx sides
     * read the same bound, so the recall join can never compare different
     * query samples. */
-  private[graft] def recallQueryBound(s: SparkSession): Long =
-    s.conf.getOption("graft.ann.recallQueries").map { v =>
-      val n = try v.toLong catch {
-        case _: NumberFormatException => throw new IllegalArgumentException(
-          s"graft.ann.recallQueries must be a positive integer, got '$v'")
-      }
-      require(n >= 1,
-        s"graft.ann.recallQueries must be a positive integer, got '$v'")
-      n
-    }.getOrElse(10L)
+  private val RecallQueries = 10L
+
+  /** The embeddings (vec_id, embedding) with their sign-LSH `cell`: 4
+    * planes over mod-`totalPlanes` position classes. */
+  private def lshCells(s: SparkSession, d: String, totalPlanes: Int): DataFrame =
+    t(s, d, "embeddings").select(col("vec_id"), col("embedding"),
+      Similarity.signLshBucket(
+        Similarity.quantize(col("embedding")), 0 until 4, totalPlanes).as("cell"))
 
   /** The default ANN path (x_ann_ivf): data-derived 16-cell sign-LSH
     * quantizer + 4-probe multi-probe — shared with x_ann_recall so the
     * measured index and the monitored index can never diverge. */
   private def annIvfDefault(s: SparkSession, d: String): DataFrame = {
-    val e = t(s, d, "embeddings")
-    val withCell = e.select(col("vec_id"), col("embedding"),
-      Similarity.signLshBucket(
-        Similarity.quantize(col("embedding")), 0 until 4, 8).as("cell"))
-    Similarity.ivfMultiProbeTopK(
-      withCell.where(col("vec_id") < recallQueryBound(s)),
-      withCell, "vec_id", "embedding", "cell", 3, 4)
+    val withCell = lshCells(s, d, 8)
+    Similarity.topK(withCell.where(col("vec_id") < RecallQueries), withCell,
+      "vec_id", "embedding", 3, Nearest("cell", 4), Dot).drop("cosine")
   }
 
   /** LSH-cell CTEs for the default quantizer, from an existing `v`
@@ -1496,8 +1487,8 @@ object Pipeline {
     "x_ann_topk" -> Q(
       (s, d) => {
         val e = t(s, d, "embeddings")
-        Similarity.bruteForceTopK(e.where(col("vec_id") < 10), e, "vec_id",
-          "embedding", 5)
+        Similarity.topK(e.where(col("vec_id") < 10), e, "vec_id",
+          "embedding", 5, All, Dot)
       },
       Some(s"""WITH v AS (SELECT vec_id, $vqSql AS vq FROM embeddings),
         |scored AS (SELECT a.vec_id AS qid, b.vec_id AS nid, $dotSql AS dot_q, $cosSql AS cosine
@@ -1529,9 +1520,8 @@ object Pipeline {
     //    artifact ("measure, don't guess" as a product surface). Both
     //    sides are deterministic integer math, so per-query recall is
     //    oracle-checkable; at scale the brute-force side runs on a query
-    //    SAMPLE (`graft.ann.recallQueries`, default 10 — the deployment's
-    //    cost knob) — the standard recall estimator an index deployment
-    //    monitors ─────────────────────────────────────────────────────────
+    //    SAMPLE (the 10 queries of RecallQueries) — the standard recall
+    //    estimator an index deployment monitors ──────────────────────────
     "x_ann_recall" -> Q(
       (s, d) => {
         val e = t(s, d, "embeddings")
@@ -1539,9 +1529,8 @@ object Pipeline {
         // BOTH the hits join and the qid list — repo convention for
         // shared frames (see rarityScores)
         val truth = graft.operators.CacheRegistry.register(
-          Similarity.bruteForceTopK(
-            e.where(col("vec_id") < recallQueryBound(s)), e,
-            "vec_id", "embedding", 3).select(col("qid"), col("nid"))
+          Similarity.topK(e.where(col("vec_id") < RecallQueries), e,
+            "vec_id", "embedding", 3, All, Dot).select(col("qid"), col("nid"))
             .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
         val approx = annIvfDefault(s, d).select(col("qid"), col("nid"))
         val hits = truth.join(approx, Seq("qid", "nid"))
@@ -1577,12 +1566,9 @@ object Pipeline {
     //    quantizer family plus 4-probe selection. ─────────────────────────
     "x_ann_lsh" -> Q(
       (s, d) => {
-        val e = t(s, d, "embeddings")
-        val withCell = e.select(col("vec_id"), col("embedding"),
-          Similarity.signLshBucket(
-            Similarity.quantize(col("embedding")), 0 until 4, 16).as("cell"))
-        Similarity.ivfTopK(withCell.where(col("vec_id") < 10), withCell,
-          "vec_id", "embedding", "cell", 3)
+        val withCell = lshCells(s, d, 16)
+        Similarity.topK(withCell.where(col("vec_id") < 10), withCell,
+          "vec_id", "embedding", 3, Own("cell"), Dot).drop("cosine")
       },
       Some(s"""WITH v AS (SELECT vec_id, $vqSql AS vq FROM embeddings),
         |p AS (SELECT vec_id, vq, $planeSumsSql FROM v),
@@ -1804,8 +1790,8 @@ object Pipeline {
         val en = e.join(t(s, d, "documents").where(col("lang") === "en")
             .select(col("doc_id")), col("doc_id") === col("vec_id"))
           .select(col("vec_id"), col("embedding"))
-        Similarity.bruteForceTopK(e.where(col("vec_id") < 10), en,
-          "vec_id", "embedding", 3)
+        Similarity.topK(e.where(col("vec_id") < 10), en,
+          "vec_id", "embedding", 3, All, Dot)
       },
       Some(s"""WITH v AS (SELECT vec_id, $vqSql AS vq FROM embeddings),
         |fv AS (SELECT v.vec_id, v.vq FROM v
@@ -1869,8 +1855,8 @@ object Pipeline {
     "x_ann_ivf_multiprobe" -> Q(
       (s, d) => {
         val e = t(s, d, "embeddings")
-        Similarity.ivfMultiProbeTopK(e.where(col("vec_id") < 10), e,
-          "vec_id", "embedding", "label", 3, 2)
+        Similarity.topK(e.where(col("vec_id") < 10), e,
+          "vec_id", "embedding", 3, Nearest("label", 2), Dot).drop("cosine")
       },
       Some(s"""WITH v AS (SELECT vec_id, label, $vqSql AS vq FROM embeddings),
         |e AS (SELECT label, unnest(list_zip(vq, generate_series(1, len(vq)))) AS z FROM v),
@@ -1907,15 +1893,16 @@ object Pipeline {
     //    caches release per round; the index join-back and the
     //    probe→corpus scoring are plain equi-joins — at 100 TB the
     //    trained assignment would persist as a table column and this
-    //    query becomes ivfMultiProbeTopK alone ─────────────────────────
+    //    query becomes its Nearest("cell", 4) search alone ─────────────
     "x_ann_ivf_trained" -> Q(
       (s, d) => {
         val e = t(s, d, "embeddings")
         val cells = Similarity.kmeansIterations(e, "vec_id", "embedding",
           iters = 2).select(col("id").as("vec_id"), col("cell"))
         val indexed = e.join(cells, "vec_id")
-        Similarity.ivfMultiProbeTopK(indexed.where(col("vec_id") < 10),
-          indexed, "vec_id", "embedding", "cell", 3, 4)
+        Similarity.topK(indexed.where(col("vec_id") < 10),
+          indexed, "vec_id", "embedding", 3, Nearest("cell", 4), Dot)
+          .drop("cosine")
       },
       Some(s"""WITH ${kmeansCtesSql(2)},
         |asn AS (SELECT id, vq, cell FROM a2),
@@ -1927,13 +1914,13 @@ object Pipeline {
     //    codebook over 2-bit sign-LSH seed cells; vectors become (code0,
     //    code1) and query scoring is two distance-table lookups (broadcast
     //    equi-joins), never arithmetic over corpus floats. Integer-exact
-    //    end-to-end; ranked by ascending approx squared L2. See
-    //    Similarity.pqTopK for the composition-with-IVF production shape ──
+    //    end-to-end; ranked by ascending approx squared L2. x_ann_ivfpq is
+    //    the same scorer behind a Nearest probe, the production shape ────
     "x_ann_pq" -> Q(
       (s, d) => {
         val e = t(s, d, "embeddings")
-        Similarity.pqTopK(e.where(col("vec_id") < 10), e,
-          "vec_id", "embedding", k = 3)
+        Similarity.topK(e.where(col("vec_id") < 10), e,
+          "vec_id", "embedding", 3, All, Pq(32))
           .orderBy("qid", "rank")
       },
       Some(s"""WITH pq_v AS (SELECT vec_id, $vqSql AS vq FROM embeddings),
@@ -1958,12 +1945,9 @@ object Pipeline {
     //    drift in either half breaks this query too ───────────────────────
     "x_ann_ivfpq" -> Q(
       (s, d) => {
-        val e = t(s, d, "embeddings")
-        val withCell = e.select(col("vec_id"), col("embedding"),
-          Similarity.signLshBucket(
-            Similarity.quantize(col("embedding")), 0 until 4, 8).as("cell"))
-        Similarity.ivfPqTopK(withCell.where(col("vec_id") < 10), withCell,
-          "vec_id", "embedding", "cell", k = 3, nprobe = 4)
+        val withCell = lshCells(s, d, 8)
+        Similarity.topK(withCell.where(col("vec_id") < 10), withCell,
+          "vec_id", "embedding", 3, Nearest("cell", 4), Pq(32))
           .orderBy("qid", "rank")
       },
       Some(s"""WITH pq_v AS (SELECT vec_id, $vqSql AS vq FROM embeddings),
@@ -4388,16 +4372,16 @@ object Pipeline {
         |GROUP BY 1 ORDER BY score_u DESC, doc_id LIMIT 20""".stripMargin)),
 
     // ── Hybrid search: reciprocal-rank fusion of the BM25 lexical top-20
-    //    and the vector dot-product top-20 for one probe (bruteForceTopK
-    //    ranks by quantized dot product, which is norm-weighted, not
+    //    and the vector dot-product top-20 for one probe (the exact
+    //    search ranks by quantized dot product, which is norm-weighted, not
     //    angular — the oracle mirrors dot ordering) — the standard
     //    two-leg retrieval stack (lexical catches exact terms, vectors
     //    catch paraphrase; RRF needs no score calibration between them).
     //    rrf = Σ 10000 // (60 + rank), integer-exact, absent leg
     //    contributes 0. The corpus ships vec_id ≡ doc_id so the legs
     //    join directly. Both legs are the EXISTING operators' shapes
-    //    (bm25TopK shared verbatim; the vector leg is bruteForceTopK
-    //    with a 1-row broadcast probe — at scale swap in the IVF path);
+    //    (bm25TopK shared verbatim; the vector leg is Similarity.topK over
+    //    All with a 1-row broadcast probe — at scale, a Nearest probe);
     //    the fusion itself touches only 20+20 ranked rows ─────────────────
     "x_hybrid_search" -> Q(
       (s, d) => {
@@ -4406,8 +4390,8 @@ object Pipeline {
             Window.orderBy(desc("score_u"), asc("doc_id"))).cast("long"))
           .select(col("doc_id"), col("rank_lex"))
         val e = t(s, d, "embeddings")
-        val vec = Similarity.bruteForceTopK(
-          e.where(col("vec_id") === 0), e, "vec_id", "embedding", 20)
+        val vec = Similarity.topK(
+          e.where(col("vec_id") === 0), e, "vec_id", "embedding", 20, All, Dot)
           .select(col("nid").as("doc_id"), col("rank").as("rank_vec"))
         lex.join(vec, Seq("doc_id"), "full_outer")
           .select(col("doc_id"), col("rank_lex"), col("rank_vec"),
@@ -4927,7 +4911,7 @@ object Pipeline {
     //    pipeline: the cell equi-join keeps the pair space at ~1/cells of
     //    the en side per query instead of the full en×non-en product;
     //    recall lost to cell boundaries is the documented trade (the
-    //    multi-probe upgrade path is ivfMultiProbeTopK, same quantizer).
+    //    multi-probe upgrade path is a Nearest probe, same quantizer).
     //    Queries with an empty en cell yield no row — by design ────────────
     "x_crosslingual_mine" -> Q(
       (s, d) => {
@@ -5069,20 +5053,9 @@ object Pipeline {
     //    land directly in the contrastive dataloader ───────────────────────
     "x_hard_negatives" -> Q(
       (s, d) => {
-        val v = t(s, d, "embeddings")
-          .select(col("vec_id"), Similarity.quantize(col("embedding")).as("vq"))
-          .withColumn("cell",
-            Similarity.signLshBucket(col("vq"), 0 until 4, 8))
-        val q = v.where(col("vec_id") < 10)
-          .select(col("vec_id").as("qid"), col("vq").as("qv"), col("cell"))
-        val c = v.select(col("vec_id").as("nid"), col("vq").as("nv"),
-          col("cell"))
-        val w = Window.partitionBy(col("qid"))
-          .orderBy(desc("dot_q"), asc("nid"))
-        q.join(c, "cell").where(col("qid") =!= col("nid"))
-          .select(col("qid"), col("nid"),
-            Similarity.dotQ(col("qv"), col("nv")).as("dot_q"))
-          .withColumn("rank", row_number().over(w).cast("long"))
+        val withCell = lshCells(s, d, 8)
+        Similarity.topK(withCell.where(col("vec_id") < 10), withCell,
+          "vec_id", "embedding", 8, Own("cell"), Dot)
           .where(col("rank") === 1 || col("rank").between(4, 8))
           .withColumn("role",
             when(col("rank") === 1, "pos").otherwise("neg"))

@@ -13,34 +13,6 @@ import org.apache.spark.sql.classic.ExpressionUtils
 object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
-
-  /** One-line summaries of the session's live cache entries (dev
-    * observability: which plans are cached, whether each has materialized
-    * buffers). CacheManager is `private[sql]`, hence it lives in this
-    * bridge. */
-  def cachedPlanSummaries(
-      spark: org.apache.spark.sql.SparkSession): Seq[String] =
-    try {
-      val cm = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-        .sharedState.cacheManager
-      val m = cm.getClass.getDeclaredMethod("cachedData")
-      m.setAccessible(true)
-      m.invoke(cm)
-        .asInstanceOf[Seq[org.apache.spark.sql.execution.CachedData]]
-        .map { cd =>
-          val rel = cd.cachedRepresentation
-          val line = cd.plan.toString.linesIterator.take(1).mkString
-          s"[${rel.cacheBuilder.isCachedColumnBuffersLoaded}] ${line.take(140)}"
-        }
-    } catch {
-      // CacheManager's internal field shape has changed across Spark
-      // releases; this is a dev probe, so degrade to a diagnostic line
-      // instead of throwing deep inside whoever called it (ADVICE r15)
-      case e: ReflectiveOperationException =>
-        Seq(s"<cachedPlanSummaries unavailable on this Spark: $e>")
-      case e: ClassCastException =>
-        Seq(s"<cachedPlanSummaries unavailable on this Spark: $e>")
-    }
 }
 
 /** Bridge to the `private[sql]` streaming execution internals: the last

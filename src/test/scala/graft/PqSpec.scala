@@ -3,6 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.operators.Similarity
+import graft.operators.Similarity.{All, Nearest, Pq}
 
 /** Product-quantization laws. The encode→table→ADC chain is integer-exact
   * by construction, so the generative law recomputes the WHOLE pipeline
@@ -70,8 +71,8 @@ class PqSpec extends AnyFunSuite {
       val rows = (0 until 50).map(i =>
         (i.toLong, Array.fill(2 * sd)((rnd.nextFloat() - 0.5f) * 2f)))
       val df = rows.toDF("vec_id", "embedding")
-      val got = Similarity.pqTopK(df.where(col("vec_id") < 5), df,
-        "vec_id", "embedding", k = 3, subDims = sd)
+      val got = Similarity.topK(df.where(col("vec_id") < 5), df,
+        "vec_id", "embedding", k = 3, All, Pq(sd))
         .collect()
         .map(r => (r.getLong(0), r.getLong(1)) -> ((r.getLong(2), r.getLong(3))))
         .toMap
@@ -106,8 +107,8 @@ class PqSpec extends AnyFunSuite {
     }
     val df = rows.toDF("vec_id", "embedding")
     val isQuery = col("vec_id") % per === 0
-    val got = Similarity.pqTopK(df.where(isQuery), df,
-      "vec_id", "embedding", k = 3, subDims = 8)
+    val got = Similarity.topK(df.where(isQuery), df,
+      "vec_id", "embedding", k = 3, All, Pq(8))
       .select("qid", "nid").collect()
       .map(r => (r.getLong(0), r.getLong(1)))
     assert(got.length == kClusters * 3, s"expected 3 neighbors per query")
@@ -125,12 +126,12 @@ class PqSpec extends AnyFunSuite {
     val withCell = df.select(col("vec_id"), col("embedding"),
       Similarity.signLshBucket(
         Similarity.quantize(col("embedding")), 0 until 4, 8).as("cell"))
-    val full = Similarity.pqTopK(df.where(col("vec_id") < 5), df,
-      "vec_id", "embedding", k = 3, subDims = 8)
+    val full = Similarity.topK(df.where(col("vec_id") < 5), df,
+      "vec_id", "embedding", k = 3, All, Pq(8))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
-    val composed = Similarity.ivfPqTopK(
+    val composed = Similarity.topK(
       withCell.where(col("vec_id") < 5), withCell,
-      "vec_id", "embedding", "cell", k = 3, nprobe = 16, subDims = 8)
+      "vec_id", "embedding", k = 3, Nearest("cell", 16), Pq(8))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
     assert(composed == full,
       "all-cells IVF+PQ must reproduce the whole-corpus ADC scan")
@@ -153,9 +154,9 @@ class PqSpec extends AnyFunSuite {
     val withCell = df.select(col("vec_id"), col("embedding"),
       Similarity.signLshBucket(
         Similarity.quantize(col("embedding")), 0 until 4, 8).as("cell"))
-    val got = Similarity.ivfPqTopK(
+    val got = Similarity.topK(
       withCell.where(col("vec_id") % per === 0), withCell,
-      "vec_id", "embedding", "cell", k = 3, nprobe = 4, subDims = 8)
+      "vec_id", "embedding", k = 3, Nearest("cell", 4), Pq(8))
       .select("qid", "nid").collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(got.length == kClusters * 3, "expected 3 neighbors per query")
     val crossCluster = got.filter { case (q, n) => q / per != n / per }
@@ -166,11 +167,11 @@ class PqSpec extends AnyFunSuite {
   test("degenerate shapes: empty corpus and single-vector corpus return " +
     "empty top-k cleanly") {
     val empty = Seq.empty[(Long, Array[Float])].toDF("vec_id", "embedding")
-    assert(Similarity.pqTopK(empty, empty, "vec_id", "embedding", 3, 4)
+    assert(Similarity.topK(empty, empty, "vec_id", "embedding", 3, All, Pq(4))
       .count() == 0)
     val one = Seq((0L, Array.fill(8)(0.5f))).toDF("vec_id", "embedding")
     // the only vector is the query; self is excluded -> no neighbors
-    assert(Similarity.pqTopK(one, one, "vec_id", "embedding", 3, 4)
+    assert(Similarity.topK(one, one, "vec_id", "embedding", 3, All, Pq(4))
       .count() == 0)
   }
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Similarity
+import graft.operators.Similarity.{All, Dot, Nearest, Own}
 
 /** ANN top-k on hand-computable vectors: exact integer quantization, rank
   * order, tie-breaks, and the IVF cell restriction.
@@ -22,8 +23,9 @@ class SimilaritySpec extends AnyFunSuite {
     .toDF("vec_id", "embedding", "label")
 
   test("brute-force top-k ranks by exact integer dot product") {
-    val out = Similarity.bruteForceTopK(
-      vecs.where(col("vec_id") === 1), vecs, "vec_id", "embedding", k = 3)
+    val out = Similarity.topK(
+      vecs.where(col("vec_id") === 1), vecs, "vec_id", "embedding", k = 3,
+      All, Dot)
       .orderBy("rank").collect()
     assert(out.map(_.getLong(1)).toSeq == Seq(5L, 2L, 3L),
       "n5 ties n1's own vector omitted; exact dup ranks first")
@@ -47,8 +49,9 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("ivf top-k only probes the query's cell") {
-    val out = Similarity.ivfTopK(
-      vecs.where(col("vec_id") === 1), vecs, "vec_id", "embedding", "label", k = 10)
+    val out = Similarity.topK(
+      vecs.where(col("vec_id") === 1), vecs, "vec_id", "embedding", k = 10,
+      Own("label"), Dot)
       .collect().map(_.getLong(1)).toSet
     assert(out == Set(2L, 3L, 4L), "cell-1 vector (id 5) is never probed")
   }
@@ -57,15 +60,15 @@ class SimilaritySpec extends AnyFunSuite {
     // query 1 lives in cell 0; its exact duplicate (id 5) lives in cell 1.
     // nprobe=1 degenerates to the query's nearest cell only; nprobe=2 must
     // reach into cell 1 and surface the duplicate at rank 1.
-    val two = Similarity.ivfMultiProbeTopK(
-      vecs.where(col("vec_id") === 1), vecs, "vec_id", "embedding", "label",
-      k = 10, nprobe = 2)
+    val two = Similarity.topK(
+      vecs.where(col("vec_id") === 1), vecs, "vec_id", "embedding",
+      k = 10, Nearest("label", 2), Dot)
       .orderBy("rank").collect().map(_.getLong(1)).toSeq
     assert(two.contains(5L), "second probe reaches the neighboring cell")
     assert(two.head == 5L, "the exact duplicate ranks first once reachable")
-    val one = Similarity.ivfMultiProbeTopK(
-      vecs.where(col("vec_id") === 1), vecs, "vec_id", "embedding", "label",
-      k = 10, nprobe = 1)
+    val one = Similarity.topK(
+      vecs.where(col("vec_id") === 1), vecs, "vec_id", "embedding",
+      k = 10, Nearest("label", 1), Dot)
       .collect().map(_.getLong(1)).toSet
     assert(!one.contains(5L) || one.size < two.size,
       "nprobe=1 probes strictly fewer cells")
@@ -151,13 +154,13 @@ class SimilaritySpec extends AnyFunSuite {
     assert(indexed.select("cell").distinct().count() <= 16,
       "4-bit seeded quantizer must train at most 16 cells")
 
-    val truth = Similarity.bruteForceTopK(
-      df.where(isQuery), df, "vec_id", "embedding", k = 3)
+    val truth = Similarity.topK(
+      df.where(isQuery), df, "vec_id", "embedding", k = 3, All, Dot)
       .select("qid", "nid").collect()
       .groupBy(_.getLong(0)).view.mapValues(_.map(_.getLong(1)).toSet).toMap
-    val got = Similarity.ivfMultiProbeTopK(
-      indexed.where(isQuery), indexed, "vec_id", "embedding", "cell",
-      k = 3, nprobe = 2)
+    val got = Similarity.topK(
+      indexed.where(isQuery), indexed, "vec_id", "embedding",
+      k = 3, Nearest("cell", 2), Dot)
       .select("qid", "nid").collect()
       .groupBy(_.getLong(0)).view.mapValues(_.map(_.getLong(1)).toSet).toMap
     val per = truth.map { case (q, t) =>
@@ -169,23 +172,26 @@ class SimilaritySpec extends AnyFunSuite {
         f"geometry probing 2/16 cells, got $recall%.2f")
   }
 
-  test("graft.ann.recallQueries scales the recall monitor's truth side") {
-    val sf = "/root/testdata/sf0.001"
-    spark.conf.set("graft.ann.recallQueries", "3")
-    try {
-      val qids = SparkEntry.queries("x_ann_recall")(spark, sf)
-        .select("qid").distinct().collect().map(_.getLong(0)).toSet
-      assert(qids == Set(0L, 1L, 2L),
-        s"truth side must sample exactly vec_id < 3, got $qids")
-    } finally spark.conf.unset("graft.ann.recallQueries")
-    spark.conf.set("graft.ann.recallQueries", "not-a-number")
-    try {
-      val ex = intercept[IllegalArgumentException] {
-        SparkEntry.queries("x_ann_recall")(spark, sf).count()
-      }
-      assert(ex.getMessage.contains("graft.ann.recallQueries"),
-        s"error must name the conf key, got: ${ex.getMessage}")
-    } finally spark.conf.unset("graft.ann.recallQueries")
+  test("exact-scorer composition law: Nearest over every cell equals All " +
+    "cell for cell, and so does Own when every vector shares one cell") {
+    val rnd = new scala.util.Random(73)
+    val df = (0 until 60).map(i =>
+      (i.toLong, Array.fill(16)((rnd.nextFloat() - 0.5f) * 2f)))
+      .toDF("vec_id", "embedding")
+      .withColumn("cell", Similarity.signLshBucket(
+        Similarity.quantize(col("embedding")), 0 until 4, 8))
+    def rows(corpus: org.apache.spark.sql.DataFrame, probe: Similarity.Probe) =
+      Similarity.topK(corpus.where(col("vec_id") < 5), corpus, "vec_id",
+        "embedding", k = 3, probe, Dot).collect().map(_.toSeq).toSet
+    val cells = df.select("cell").distinct().count().toInt
+    assert(cells > 1, "the fixture must spread over several cells")
+    val all = rows(df, All)
+    assert(all.size == 15, "3 neighbors for each of the 5 queries")
+    assert(rows(df, Nearest("cell", cells)) == all,
+      "probing every cell must reproduce the exhaustive scan")
+    val oneCell = df.withColumn("cell", lit(0L))
+    assert(rows(oneCell, Own("cell")) == all,
+      "a single shared cell must reproduce the exhaustive scan")
   }
 
   test("quantization is exact at 1e-6 resolution") {
