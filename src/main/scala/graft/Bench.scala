@@ -141,10 +141,6 @@ object Bench {
     xs.sorted.apply((xs.size - 1) / 2)
   }
 
-  /** Filesystem type backing `path` — the longest-mount-point-prefix match
-    * in /proc/mounts (Linux; "unknown" elsewhere). Recorded in the env
-    * stanza so a judge can tell a tmpfs checkpoint run from a spinning-disk
-    * one without re-running anything. */
   /** /proc/mounts escapes space/tab/newline/backslash in mount points as
     * octal (\040 etc.) — unescape before prefix-matching or a mount point
     * with a space never matches any path. */
@@ -161,6 +157,10 @@ object Bench {
     out.toString
   }
 
+  /** Filesystem type backing `path` — the longest-mount-point-prefix match
+    * in /proc/mounts (Linux; "unknown" elsewhere). Recorded in the env
+    * stanza so a judge can tell a tmpfs checkpoint run from a spinning-disk
+    * one without re-running anything. */
   def fsTypeOf(path: String): String =
     try {
       val abs = java.nio.file.Paths.get(path).toAbsolutePath.toString
@@ -179,13 +179,6 @@ object Bench {
       best._2
     } catch { case _: Exception => "unknown" }
 
-  /** Environment stanza for bench.json: 1-minute load average (start and
-    * end of the suite bracket the contention window), CPU count, JVM heap,
-    * and the scratch/checkpoint directory with its filesystem type. The
-    * round-11 verdict could not separate contention from regression
-    * (stream_neardup 16.8s driver vs 2.95s committed, different spikes per
-    * run); this stanza plus per-rep arrays makes that attribution possible
-    * from the artifact alone. */
   /** Minimal JSON string escape — the scratch path is environment-supplied
     * and a quote/backslash in it must not emit malformed bench.json. */
   private def jsonEscape(s: String): String =
@@ -196,6 +189,13 @@ object Bench {
       case c    => c.toString
     }
 
+  /** Environment stanza for bench.json: 1-minute load average (start and
+    * end of the suite bracket the contention window), CPU count, JVM heap,
+    * and the scratch/checkpoint directory with its filesystem type. The
+    * round-11 verdict could not separate contention from regression
+    * (stream_neardup 16.8s driver vs 2.95s committed, different spikes per
+    * run); this stanza plus per-rep arrays makes that attribution possible
+    * from the artifact alone. */
   def envStanza(fmt: Double => String, loadStart: Double,
                 loadEnd: Double, scratch: String): String = {
     val os = java.lang.management.ManagementFactory.getOperatingSystemMXBean

@@ -17,11 +17,9 @@ object LocalSession {
     * Any other master — `local-cluster[...]`, which simulates a cluster,
     * included — gets the Spark default 64m, the scale-safe value, so a
     * deployment that reuses this builder's conf block can never inherit
-    * the toy size silently. SPARK_GRAFT_ADVISORY_SIZE
-    * overrides either branch for A/B runs. */
+    * the toy size silently. */
   def advisorySizeFor(master: String): String =
-    sys.env.getOrElse("SPARK_GRAFT_ADVISORY_SIZE",
-      if (master.startsWith("local[")) "4m" else "64m")
+    if (master.startsWith("local[")) "4m" else "64m"
 
   /** Cores default honors SPARK_GRAFT_CPUS; shuffle partitions track cores
     * (never the 200 default — pointless tiny tasks on local data).
@@ -40,10 +38,8 @@ object LocalSession {
       // path. Threshold 0 selects the serialized (Unsafe) writer — one
       // data+index file per map task regardless of R — which is also the
       // writer any at-scale job uses (R there is in the thousands, past
-      // the 200 default threshold anyway). Override via
-      // SPARK_GRAFT_BYPASS_THRESHOLD to re-measure the default.
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BYPASS_THRESHOLD", "0"))
+      // the 200 default threshold anyway).
+      .config("spark.shuffle.sort.bypassMergeThreshold", "0")
       // AQE partition coalescing: with parallelismFirst=true (the default)
       // AQE never coalesces below the default parallelism — on local[32]
       // that pins every post-shuffle stage at 32 tasks no matter how few
@@ -51,8 +47,7 @@ object LocalSession {
       // is what the Spark SQL tuning guide itself recommends and the only
       // behavior that stays scale-adaptive (partition count derives from
       // measured shuffle bytes, not from the machine's core count).
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_PARALLELISM_FIRST", "false"))
+      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
       // Advisory post-shuffle partition size: derived from the master URL
       // (4m under local[*], the scale-safe Spark default 64m otherwise) —
       // see advisorySizeFor.
@@ -69,8 +64,7 @@ object LocalSession {
       // cached data was intact, only the compiled classes were gone).
       // 5000 entries ≈ a few hundred MB of classes at worst, the right
       // trade for any long-lived session at any scale.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "5000"))
+      .config("spark.sql.codegen.cache.maxEntries", "5000")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.session.timeZone", "UTC")
       // TIMESTAMP(NANOS) parquet columns surface as longs that

@@ -520,6 +520,28 @@ object Pipeline {
       "CAST(sum(CAST(round(value*100) AS BIGINT)) AS BIGINT) AS sum_cents, " +
       "epoch_us(max(ts)) AS last_us FROM events GROUP BY user_id"
 
+  /** ONE oracle for both sessionize twins (complete-mode and watermarked
+    * append-mode): gaps-and-islands with the same 30-minute gap, session
+    * end = last event + gap. */
+  private val sessionizeSql =
+    """WITH g AS (
+      |  SELECT user_id, ts, event_id, CAST(round(value*100) AS BIGINT) AS cents,
+      |    CASE WHEN lag(ts) OVER w IS NULL
+      |         OR epoch_us(ts) - epoch_us(lag(ts) OVER w) > 1800000000
+      |         THEN 1 ELSE 0 END AS brk
+      |  FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL
+      |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
+      |), s AS (
+      |  SELECT user_id, ts, cents,
+      |    sum(brk) OVER (PARTITION BY user_id ORDER BY ts, event_id
+      |                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
+      |  FROM g
+      |)
+      |SELECT user_id, epoch_us(min(ts)) AS sess_start_us,
+      |       epoch_us(max(ts)) + 1800000000 AS sess_end_us,
+      |       count(*) AS n_events, CAST(sum(cents) AS BIGINT) AS cents
+      |FROM s GROUP BY user_id, sid""".stripMargin
+
   // minhash oracle fragments (must mirror Dedup.minhashSignature/lshBands):
   // each shingle is hashed twice (md5(sh) || md5('#'+sh) = 64 hex chars); the
   // 16 disjoint 4-hex chunks decode to 16-bit ints (the Spark side uses
@@ -3711,23 +3733,7 @@ object Pipeline {
     //    gap, session end = last event + gap ───────────────────────────────
     "stream_sessionize" -> Q(
       (s, d) => graft.streaming.StreamingSync.sessionizedCounts(s, d, 30),
-      Some("""WITH g AS (
-        |  SELECT user_id, ts, event_id, CAST(round(value*100) AS BIGINT) AS cents,
-        |    CASE WHEN lag(ts) OVER w IS NULL
-        |         OR epoch_us(ts) - epoch_us(lag(ts) OVER w) > 1800000000
-        |         THEN 1 ELSE 0 END AS brk
-        |  FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-        |), s AS (
-        |  SELECT user_id, ts, cents,
-        |    sum(brk) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
-        |  FROM g
-        |)
-        |SELECT user_id, epoch_us(min(ts)) AS sess_start_us,
-        |       epoch_us(max(ts)) + 1800000000 AS sess_end_us,
-        |       count(*) AS n_events, CAST(sum(cents) AS BIGINT) AS cents
-        |FROM s GROUP BY user_id, sid""".stripMargin)),
+      Some(sessionizeSql)),
 
     // ── Structured Streaming: the WATERMARKED append-mode sessionization,
     //    oracle-checked as data — a far-future sentinel batch pushes the
@@ -3736,23 +3742,7 @@ object Pipeline {
     //    each emitted once. Same oracle as stream_sessionize ─────────────────
     "stream_sessionize_wm" -> Q(
       (s, d) => graft.streaming.StreamingSync.sessionizedCountsClosed(s, d, 30),
-      Some("""WITH g AS (
-        |  SELECT user_id, ts, event_id, CAST(round(value*100) AS BIGINT) AS cents,
-        |    CASE WHEN lag(ts) OVER w IS NULL
-        |         OR epoch_us(ts) - epoch_us(lag(ts) OVER w) > 1800000000
-        |         THEN 1 ELSE 0 END AS brk
-        |  FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-        |), s AS (
-        |  SELECT user_id, ts, cents,
-        |    sum(brk) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
-        |  FROM g
-        |)
-        |SELECT user_id, epoch_us(min(ts)) AS sess_start_us,
-        |       epoch_us(max(ts)) + 1800000000 AS sess_end_us,
-        |       count(*) AS n_events, CAST(sum(cents) AS BIGINT) AS cents
-        |FROM s GROUP BY user_id, sid""".stripMargin)),
+      Some(sessionizeSql)),
 
     // ── Structured Streaming: custom per-key state via mapGroupsWithState,
     //    batch-parity with a plain per-user rollup ───────────────────────────

@@ -144,10 +144,8 @@ class ConfigSpec extends AnyFunSuite {
 
   test("the toy 4m advisory size is for local[...] masters only: " +
        "local-cluster[...] simulates a cluster and gets the scale-safe 64m") {
-    if (!sys.env.contains("SPARK_GRAFT_ADVISORY_SIZE")) {
-      assert(LocalSession.advisorySizeFor("local[4]") == "4m")
-      assert(LocalSession.advisorySizeFor("local[*]") == "4m")
-      assert(LocalSession.advisorySizeFor("local-cluster[2,1,1024]") == "64m")
-    }
+    assert(LocalSession.advisorySizeFor("local[4]") == "4m")
+    assert(LocalSession.advisorySizeFor("local[*]") == "4m")
+    assert(LocalSession.advisorySizeFor("local-cluster[2,1,1024]") == "64m")
   }
 }

@@ -52,6 +52,27 @@ class StreamingSpec extends AnyFunSuite {
     assert(dedup.isEmpty && dedup.columns.toSeq == Seq("user_id"))
   }
 
+  test("every registered stream_* twin drains under its own query name " +
+    "and leaves its micro-batch plan at sf0.001") {
+    val sf = "/root/testdata/sf0.001"
+    val twins = SparkEntry.queries.keys.filter(_.startsWith("stream_"))
+      .toSeq.sorted
+    assert(twins.size == 22, s"registered twins: $twins")
+    val names = twins.map { twin =>
+      SparkEntry.queries(twin)(spark, sf).count()
+      val prog = graft.streaming.StreamingSync.lastRunProgress
+      assert(prog.nonEmpty, s"$twin left no progress")
+      val named = prog.map(_.name).distinct.toSeq
+      assert(named.size == 1 && named.head.startsWith("graft_stream_"),
+        s"$twin batches carry query names $named")
+      assert(graft.streaming.StreamingSync.lastRunPlan.isDefined,
+        s"$twin left no captured micro-batch plan")
+      named.head
+    }
+    assert(names.distinct.size == twins.size,
+      s"query names are not distinct per twin: ${twins.zip(names)}")
+  }
+
   test("corpus histogram: multi-batch drain compacts per-bucket state to " +
     "the cumulative counts (update-mode last-writer-wins across batches)") {
     import spark.implicits._
