@@ -131,7 +131,8 @@ object Bench {
     "x_dedup_semantic", "stream_cdc_apply", "x_bpe_merges",
     "x_dedup_substring",
     "x_preference_pairs", "x_shard_rebalance", "x_ann_filtered",
-    "x_compressibility", "stream_attribution", "x_pack_masked")
+    "x_compressibility", "stream_attribution", "x_pack_masked",
+    "stream_quality_score", "stream_decontaminate")
 
   /** Lower median: exact middle for odd n (the common n=3 case), the lower
     * of the two middles for even n — never interpolates a time that was
@@ -179,31 +180,19 @@ object Bench {
       best._2
     } catch { case _: Exception => "unknown" }
 
-  /** Minimal JSON string escape — the scratch path is environment-supplied
-    * and a quote/backslash in it must not emit malformed bench.json. */
-  private def jsonEscape(s: String): String =
-    s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c    => c.toString
-    }
-
-  /** Environment stanza for bench.json: 1-minute load average (start and
-    * end of the suite bracket the contention window), CPU count, JVM heap,
-    * and the scratch/checkpoint directory with its filesystem type. The
-    * round-11 verdict could not separate contention from regression
-    * (stream_neardup 16.8s driver vs 2.95s committed, different spikes per
-    * run); this stanza plus per-rep arrays makes that attribution possible
-    * from the artifact alone. */
-  def envStanza(fmt: Double => String, loadStart: Double,
-                loadEnd: Double, scratch: String): String = {
+  /** The host half of bench.json's environment stanza: CPU count, JVM
+    * heap, and the scratch directory with its filesystem type; the other
+    * half is the 1-minute load average at the start and end of the suite,
+    * which brackets the contention window. The round-11 verdict could not
+    * separate contention from regression (stream_neardup 16.8s driver vs
+    * 2.95s committed, different spikes per run); this stanza plus per-rep
+    * arrays makes that attribution possible from the artifact alone. */
+  def hostStanza(scratch: String): String = {
     val os = java.lang.management.ManagementFactory.getOperatingSystemMXBean
     val rt = Runtime.getRuntime
-    s""""env":{"load_avg_start":${fmt(loadStart)},"load_avg_end":${fmt(loadEnd)},""" +
-      s""""cpus":${os.getAvailableProcessors},""" +
+    s""""cpus":${os.getAvailableProcessors},""" +
       s""""heap_max_mb":${rt.maxMemory / (1024 * 1024)},""" +
-      s""""scratch_dir":"${jsonEscape(scratch)}","scratch_fs":"${jsonEscape(fsTypeOf(scratch))}"}"""
+      s""""scratch_dir":${Verify.jsonString(scratch)},"scratch_fs":${Verify.jsonString(fsTypeOf(scratch))}"""
   }
 
   def main(args: Array[String]): Unit = {
@@ -333,11 +322,9 @@ object Bench {
     val hlNames = headline.filter(medByName.contains)
     val headlineQs = toJson(hlNames.map(n => n -> medByName(n)))
 
-    val scratch = spark.conf.getOption("graft.stream.scratchDir")
-      .getOrElse(sys.props("java.io.tmpdir"))
-    val env = envStanza(fmt, loadStart, loadEnd, scratch)
-    def lineOf(qs: String, extra: String) =
-      s"""{"metric":"total","value":${fmt(totalMedian)},"unit":"sec","agg":"median_of_$reps","rep_order":"interleaved","total_min":${fmt(totalMin)},"total_cpu":${fmt(totalCpu)},"jvm_cpu":${fmt(jvmCpuSec)},"total_wall":${fmt(wallSec)},"queries":$qs,$extra$env,"n_queries":${results.size},"sf":"$sfDir","failed":$failedJson,"full":"$outFile"}"""
+    val loads = s""""load_avg_start":${fmt(loadStart)},"load_avg_end":${fmt(loadEnd)}"""
+    def lineOf(qs: String, extra: String, env: String) =
+      s"""{"metric":"total","value":${fmt(totalMedian)},"unit":"sec","agg":"median_of_$reps","rep_order":"interleaved","total_min":${fmt(totalMin)},"total_cpu":${fmt(totalCpu)},"jvm_cpu":${fmt(jvmCpuSec)},"total_wall":${fmt(wallSec)},"queries":$qs,$extra"env":{$env},"n_queries":${results.size},"sf":"$sfDir","failed":$failedJson,"full":"$outFile"}"""
     // r16 (VERDICT r15 ask #1): the driver's round-over-round comparison
     // reads only this stdout line, whose per-query stats were wall MEDIANS
     // alone — a contended run (r15: load 12.7 at start) produced 23
@@ -345,11 +332,14 @@ object Bench {
     // Surface the contention-robust per-query stats HERE, additions-only:
     // "min_hl" = per-query minimum wall seconds, "cpu_hl" = per-query
     // median executor-CPU seconds, both %.2f ARRAYS aligned with the
-    // "queries" map's key order (keyed maps for 43 queries do not fit the
+    // "queries" map's key order (keyed maps for 45 queries do not fit the
     // driver's 2000-char tail window; the r15 line measured 1432 chars).
     // If a pathologically contended run inflates the line past the tail
     // budget, the arrays are dropped (cpu first) rather than risk the
-    // line's HEAD being sheared off and parsing as null.
+    // line's HEAD being sheared off and parsing as null. Its env carries
+    // the load averages only (the ledger's load-mismatch gate reads them);
+    // the host half stays in bench.json, which makes room for the
+    // 45-name headline with both arrays (1,956 → 1,887 chars at sf0.01).
     def fmt2(v: Double): String =
       String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
     val minByName = mins.toMap
@@ -357,12 +347,13 @@ object Bench {
     def arr(m: Map[String, Double]): String =
       hlNames.map(n => fmt2(m(n))).mkString("[", ",", "]")
     val stdoutBudget = 1900 // 2000-char tail minus the sbt success line
+    def headlineOf(extra: String) = lineOf(headlineQs, extra, loads)
     val stdoutLine = Seq(
-      lineOf(headlineQs, s""""min_hl":${arr(minByName)},"cpu_hl":${arr(cpuByName)},"""),
-      lineOf(headlineQs, s""""min_hl":${arr(minByName)},"""),
-      lineOf(headlineQs, ""))
+      headlineOf(s""""min_hl":${arr(minByName)},"cpu_hl":${arr(cpuByName)},"""),
+      headlineOf(s""""min_hl":${arr(minByName)},"""),
+      headlineOf(""))
       .find(_.length <= stdoutBudget)
-      .getOrElse(lineOf(headlineQs, ""))
+      .getOrElse(headlineOf(""))
     // full artifact additionally carries the RAW per-rep arrays — the
     // round-11 lesson: a median alone cannot show a judge whether a slow
     // query was slow three times (a regression) or once (contention) —
@@ -370,7 +361,8 @@ object Bench {
     // wall-only "regression" can be corroborated or refuted from the
     // artifact without re-running
     val fullLine = lineOf(toJson(medians),
-      s""""queries_min":${toJson(mins)},"queries_cpu":${toJson(cpuMedians)},"queries_reps":${toJsonArrays(results)},"queries_cpu_reps":${toJsonArrays(cpuResults)},""")
+      s""""queries_min":${toJson(mins)},"queries_cpu":${toJson(cpuMedians)},"queries_reps":${toJsonArrays(results)},"queries_cpu_reps":${toJsonArrays(cpuResults)},""",
+      s"$loads,${hostStanza(graft.io.Scratch.root(spark))}")
 
     try java.nio.file.Files.write(java.nio.file.Paths.get(outFile),
       (fullLine + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))

@@ -27,6 +27,7 @@ object LocalSession {
   def build(defaultCpus: String = "4", logLevel: String = "WARN"): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", defaultCpus)
     val master = sys.env.getOrElse("GRAFT_MASTER", s"local[$cpus]")
+    val warehouse = java.nio.file.Files.createTempDirectory("graft_wh").toString
     val spark = SparkSession.builder()
       .master(master)
       .withExtensions(new graft.plans.GraftExtensions)
@@ -90,9 +91,9 @@ object LocalSession {
       .config("spark.hadoop.zlib.compress.level", "BEST_SPEED")
       // bucketed-table writes (Tables.writeBucketed) land in a throwaway
       // dir, never ./spark-warehouse inside the repo
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh").toString)
+      .config("spark.sql.warehouse.dir", warehouse)
       .getOrCreate()
+    graft.io.Scratch.deleteAtEnd(spark, warehouse)
     spark.sparkContext.setLogLevel(logLevel)
     spark
   }

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.io.Tables
+import graft.io.{Scratch, Tables}
 import graft.operators.{AsOf, Contamination, Dedup, Embeddings, Multimodal, RangeJoin, Similarity, TextAnalysis}
 import graft.operators.Similarity.{All, Dot, Nearest, Own, Pq}
 import graft.queries.Relational.Q
@@ -2995,9 +2995,7 @@ object Pipeline {
     //    each run so the version numbers are deterministic ────────────────
     "x_time_travel" -> Q(
       (s, d) => {
-        val root = s"${System.getProperty("java.io.tmpdir")}/" +
-          s"graft_tt_${math.abs(d.hashCode)}"
-        graft.catalog.Catalog.dropPath(s, root)
+        val root = Scratch.dir(s, "x_time_travel")
         val o = t(s, d, "orders").select(col("o_orderkey"),
           col("o_orderdate").cast("timestamp").as("od"),
           expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("cents"))
@@ -3032,9 +3030,7 @@ object Pipeline {
     //    is change-sized. All three ops appear at verify scale ───────────
     "x_snapshot_cdc" -> Q(
       (s, d) => {
-        val root = s"${System.getProperty("java.io.tmpdir")}/" +
-          s"graft_cdc_${math.abs(d.hashCode)}"
-        graft.catalog.Catalog.dropPath(s, root)
+        val root = Scratch.dir(s, "x_snapshot_cdc")
         val o = t(s, d, "orders").select(col("o_orderkey"),
           col("o_orderdate").cast("timestamp").as("od"),
           expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("cents"))

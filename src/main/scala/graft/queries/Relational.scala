@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.io.Tables
+import graft.io.{Scratch, Tables}
 import graft.sync.{Merge, SyncEngine, SyncStrategy, Watermark}
 import graft.functions.Functions
 
@@ -56,34 +56,6 @@ object Relational {
   private[queries] val revE4Sql =
     "CAST(round(l_extendedprice*100) AS BIGINT)*CAST(round((1-l_discount)*100) AS BIGINT)"
 
-  /** A per-run roundtrip sink dir under java.io.tmpdir, with STALE-RUN
-    * RECLAMATION: dirs from previous applications sharing the prefix are
-    * deleted if untouched for 24 HOURS (the appId key makes overwrite-mode
-    * unable to reclaim them, so every Verify/Bench run would otherwise
-    * permanently leak fact-table-scale gzip/ORC copies into /tmp). The
-    * mtime guard keeps a CONCURRENT run's live dir safe; cleanup inside
-    * the query is impossible — the returned plan reads the chunks lazily.
-    * 24h, not 1h: a concurrent run writes its chunks eagerly but reads
-    * them LAZILY at each bench rep, so under heavy contention a slow
-    * high-SF suite can legitimately re-read a dir written hours earlier
-    * (bench.var.json measured byte-identical suites spanning 112–794 s —
-    * and sf1 runs take over an hour wall); the cutoff must sit far above
-    * any plausible single-run duration, and no measured suite approaches
-    * a day.
-    */
-  private[queries] def roundtripDir(s: SparkSession, prefix: String,
-                                    d: String): String = {
-    val tmp = new java.io.File(sys.props("java.io.tmpdir"))
-    val mine = s"$prefix${s.sparkContext.applicationId}_"
-    val cutoff = System.currentTimeMillis() - 24L * 3600L * 1000
-    Option(tmp.listFiles()).getOrElse(Array.empty).foreach { f =>
-      if (f.getName.startsWith(prefix) && !f.getName.startsWith(mine) &&
-          f.lastModified() < cutoff)
-        graft.catalog.Catalog.dropPath(s, f.getAbsolutePath)
-    }
-    s"${tmp.getAbsolutePath}/$mine${d.replaceAll("[^0-9.]", "")}"
-  }
-
   val all: Map[String, Q] = Map(
 
     // ── S1/P1: scan + projection (Catalyst prunes the parquet read) ────────
@@ -95,12 +67,12 @@ object Relational {
         "CAST(l_quantity AS BIGINT) AS qty FROM lineitem")),
 
     // ── S2/S3: chunked gzip CSV sink + schema-pinned source, round-trip ────
-    // NOTE the query's timing includes the eager chunk write; the dir is
-    // keyed by applicationId so concurrent runs never race on it.
+    // NOTE the query's timing includes the eager chunk write; each call
+    // writes to its own Scratch dir, which the returned plan reads lazily.
     "s2_csv_roundtrip" -> Q(
       (s, d) => {
         val li = t(s, d, "lineitem")
-        val dir = roundtripDir(s, "graft_csv_", d)
+        val dir = Scratch.dir(s, "s2_csv_roundtrip")
         Tables.writeCsvChunks(li, dir, maxRecordsPerFile = 200000L)
         Tables.readCsvChunks(s, dir, li.schema)
           .groupBy("l_returnflag", "l_linestatus")
@@ -118,7 +90,7 @@ object Relational {
     "s3_jsonl_roundtrip" -> Q(
       (s, d) => {
         val o = t(s, d, "orders")
-        val dir = roundtripDir(s, "graft_jsonl_", d)
+        val dir = Scratch.dir(s, "s3_jsonl_roundtrip")
         Tables.writeJsonlChunks(o, dir, maxRecordsPerFile = 100000L)
         Tables.readJsonlChunks(s, dir, o.schema)
           .groupBy("o_orderstatus")
@@ -872,7 +844,7 @@ object Relational {
     "s4_orc_roundtrip" -> Q(
       (s, d) => {
         val li = t(s, d, "lineitem")
-        val dir = roundtripDir(s, "graft_orc_", d)
+        val dir = Scratch.dir(s, "s4_orc_roundtrip")
         Tables.writeOrc(li, dir)
         Tables.readOrc(s, dir)
           .groupBy("l_returnflag", "l_linestatus")
@@ -893,7 +865,7 @@ object Relational {
     "s5_partitioned_prune" -> Q(
       (s, d) => {
         val ev = t(s, d, "events")
-        val dir = roundtripDir(s, "graft_part_", d)
+        val dir = Scratch.dir(s, "s5_partitioned_prune")
         val data = ev.select(col("event_id"), col("user_id"),
           expr("CAST(round(value * 100) AS BIGINT)").as("cents"),
           col("event_type"))

@@ -30,9 +30,10 @@ import org.apache.spark.sql.types.LongType
   * micro-batch's updated rows are APPENDED to a parquet changelog sink
   * tagged with the batch id (nothing is ever held on the driver); readers
   * compact the changelog with a last-writer-wins window over batch_id — the
-  * same merge identity as graft.sync.Merge. Scratch/checkpoint dirs default
-  * to the driver-local tmpdir for local[*] runs; cluster deployments set
-  * `graft.stream.scratchDir` to a shared filesystem path.
+  * same merge identity as graft.sync.Merge. Each twin's source links,
+  * checkpoint and sink live in its own [[graft.io.Scratch]] dir, deleted
+  * when the application ends; cluster deployments set `graft.scratchDir`
+  * to a shared filesystem path.
   */
 object StreamingSync {
 
@@ -68,24 +69,6 @@ object StreamingSync {
     s
   }
 
-  private val invocation = new AtomicLong(0)
-
-  /** Per-invocation scratch root, named after the query: keyed by
-    * applicationId (unique across concurrent applications) plus an
-    * invocation counter (so a later call never deletes the files backing a
-    * previously returned lazy DataFrame). Cluster deployments point
-    * `graft.stream.scratchDir` at shared storage.
-    */
-  private def freshBase(spark: SparkSession, name: String): String = {
-    val root = spark.conf.getOption("graft.stream.scratchDir")
-      .getOrElse(sys.props("java.io.tmpdir"))
-    val base = s"$root/${name}_" +
-      spark.sparkContext.applicationId + "_" + invocation.incrementAndGet()
-    val p = new Path(base)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-    base
-  }
-
   /** Where a twin's drain lands, which fixes its output mode and how the
     * landed rows are read back.
     */
@@ -112,10 +95,11 @@ object StreamingSync {
     * source, its query and its sink. `name` is the streaming query name.
     */
   private def twin(spark: SparkSession, sfDir: String, name: String)
-                  (query: Twin => DataFrame): DataFrame = {
-    val ss = streamSession(spark)
-    query(new Twin(ss, spark, sfDir, freshBase(ss, name), name))
-  }
+                  (query: Twin => DataFrame): DataFrame =
+    // Scratch reads the parent session: streamSession forwards only
+    // graft.stream.* keys
+    query(new Twin(streamSession(spark), spark, sfDir,
+      graft.io.Scratch.dir(spark, name), name))
 
   /** What a twin's query is written against: the forked stream session
     * `ss`, the scratch `base`, its sources and its drain.
@@ -459,7 +443,7 @@ object StreamingSync {
     twin(spark, sfDir, "graft_stream_sessionize_wm") { t =>
       val ev = t.table("events")
       // Hadoop FS throughout (not java.io.File): the class doc invites
-      // cluster deployments to point graft.stream.scratchDir at shared
+      // cluster deployments to point graft.scratchDir at shared
       // storage, where a local listFiles() on the staged write returns
       // null and NPEs — unlike Twin.stream's symlink path, staging has no
       // local-only excuse

@@ -13,6 +13,7 @@ import org.apache.spark.sql.SparkSession
   */
 object TestSpark {
   lazy val spark: SparkSession = {
+    val warehouse = java.nio.file.Files.createTempDirectory("graft_wh").toString
     val s = SparkSession.builder()
       .master("local[4]")
       .withExtensions(new graft.plans.GraftExtensions)
@@ -33,9 +34,9 @@ object TestSpark {
       .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
       // mirror LocalSession: interchange gzip at BEST_SPEED
       .config("spark.hadoop.zlib.compress.level", "BEST_SPEED")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh").toString)
+      .config("spark.sql.warehouse.dir", warehouse)
       .getOrCreate()
+    graft.io.Scratch.deleteAtEnd(s, warehouse)
     s.sparkContext.setLogLevel("WARN")
     s
   }
@@ -85,10 +86,11 @@ object TestSpark {
     seen.asScala.toSeq.map(_.stripPrefix(s"$tag:"))
   }
 
-  /** Fresh temp dir under the JVM's tmpdir, deleted on JVM exit. */
+  /** Fresh temp dir under the JVM's tmpdir, deleted when the test session
+    * ends (deleteOnExit would keep every non-empty one). */
   def tmpDir(prefix: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(s"graft_test_$prefix")
-    d.toFile.deleteOnExit()
-    d.toString
+    val d = java.nio.file.Files.createTempDirectory(s"graft_test_$prefix").toString
+    graft.io.Scratch.deleteAtEnd(spark, d)
+    d
   }
 }
